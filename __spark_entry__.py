@@ -3588,10 +3588,10 @@ def q_pages_index_pipeline(spark, sf_dir):
     from osc_geo_h3grid_srv_spark.functions.spark_udfs import (
         cell_to_parent_expr)
     from osc_geo_h3grid_srv_spark.operators.index_pages import (
-        assign_cells, extract_points)
+        extract_index_clip)
     from osc_geo_h3grid_srv_spark.sources.pages import pages_dataframe
     pages = pages_dataframe(spark, 2000, partitions=8)
-    pts = assign_cells(extract_points(pages))
+    pts = extract_index_clip(pages)
     # cross-implementation gate (VERDICT r02 next-step #8): the fused
     # kernel's p1 partition key (numpy cell_to_parent over icell9) vs
     # the independent JVM bit-math replay — must agree row-for-row
@@ -6814,10 +6814,10 @@ def entry(spark: SparkSession) -> DataFrame:
     from osc_geo_h3grid_srv_spark.functions.spark_udfs import (
         reference_radius_expr)
     from osc_geo_h3grid_srv_spark.operators.index_pages import (
-        assign_cells, extract_points)
+        extract_index_clip)
     from osc_geo_h3grid_srv_spark.sources.pages import pages_dataframe
     pages = pages_dataframe(spark, 3000, partitions=8)
-    pts = assign_cells(extract_points(pages))
+    pts = extract_index_clip(pages)
     lat, lng = _BERLIN
     return (pts.filter(
         reference_radius_expr("latitude", "longitude", lat, lng)

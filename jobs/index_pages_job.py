@@ -68,11 +68,11 @@ def main():
             spark, args.n_pages,
             partitions=max(spark.sparkContext.defaultParallelism * 2, 8))
 
-    # stage 1: extract + assign + salted write (commits its own snapshot
-    # with lineage; idempotent via the pipeline's input-snapshot check is
-    # not applicable because pages come from outside the catalog, so we
-    # commit the pages themselves first to give the stage a resumable
-    # input anchor)
+    # stage 1: fused extract+index + salted write (commits its own
+    # snapshot with lineage; idempotent via the pipeline's input-snapshot
+    # check is not applicable because pages come from outside the
+    # catalog, so we commit the pages themselves first to give the stage
+    # a resumable input anchor)
     src = args.pages_path or f"synthetic:{args.n_pages}"
     try:
         prev = catalog.read_manifest("pages_raw")["lineage"].get("source")
@@ -84,13 +84,9 @@ def main():
 
     def build_points(cat, sp, **ins):
         from osc_geo_h3grid_srv_spark.operators.index_pages import (
-            assign_cells, extract_points)
-        pts = assign_cells(extract_points(ins["pages_raw"]),
-                           max_res=args.max_res,
-                           parent_res=args.parent_res)
-        return pts.repartition(
-            F.col(f"p{args.parent_res}"),
-            F.pmod(F.xxhash64("url"), F.lit(int(args.salt))))
+            salted_points)
+        return salted_points(ins["pages_raw"], max_res=args.max_res,
+                             parent_res=args.parent_res, salt=args.salt)
 
     def build_rollup(cat, sp, **ins):
         from osc_geo_h3grid_srv_spark.functions.spark_udfs import (

@@ -103,18 +103,6 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return textf.extract_text(html)
 
 
-@pandas_udf(T.ArrayType(T.StructType([
-    T.StructField("latitude", T.DoubleType()),
-    T.StructField("longitude", T.DoubleType()),
-])))
-def extract_geo_anchors_udf(html: pd.Series) -> pd.Series:
-    rows, lat, lng = textf.extract_geo_anchors(html)
-    out = [[] for _ in range(len(html))]
-    for r, la, lo in zip(rows.tolist(), lat.tolist(), lng.tolist()):
-        out[r].append({"latitude": la, "longitude": lo})
-    return pd.Series(out)
-
-
 @pandas_udf(T.StringType())
 def lang_id_udf(text: pd.Series) -> pd.Series:
     return textf.lang_id(text)

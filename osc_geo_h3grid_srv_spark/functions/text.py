@@ -13,8 +13,10 @@ import re
 import numpy as np
 import pandas as pd
 
+# re.ASCII: \d is [0-9] as in GEO_ANCHOR_RE_B (a str \d also matches
+# e.g. Arabic-Indic digits, which float() accepts)
 GEO_ANCHOR_RE = re.compile(
-    r'<span class="geo">(-?\d+\.\d{6}),(-?\d+\.\d{6})</span>')
+    r'<span class="geo">(-?\d+\.\d{6}),(-?\d+\.\d{6})</span>', re.ASCII)
 _TAG_RE = re.compile(rb"<[^>]*>")
 _WS_RE = re.compile(r"\s+")
 
@@ -128,9 +130,10 @@ def extract_geo_anchors_arrow(arr):
     # drop any match that spans a row boundary (cannot occur with
     # well-formed pages; guard keeps row mapping exact regardless)
     keep = np.array(ends_l, dtype=np.int64) <= offs64[rows + 1]
-    # bytes -> float via NumPy's C parser (no per-value Python float())
-    lat = np.array(lats, dtype="S24").astype(np.float64)
-    lng = np.array(lngs, dtype="S24").astype(np.float64)
+    # bytes -> float via NumPy's C parser (no per-value Python float());
+    # the dtype takes the widest match, so overlong values are not cut
+    lat = np.array(lats).astype(np.float64)
+    lng = np.array(lngs).astype(np.float64)
     if not keep.all():
         rows, lat, lng = rows[keep], lat[keep], lng[keep]
     return rows.astype(np.int64), lat, lng

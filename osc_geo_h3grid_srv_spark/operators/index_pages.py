@@ -1,14 +1,14 @@
 """The flagship pipeline (BASELINE.json north metric): Common-Crawl-style
-pages -> extracted text -> geo anchors -> H3 cells at res 0..9 ->
-snapshot-committed point dataset.
+pages -> geo anchors -> H3 cells at res 0..9 -> snapshot-committed point
+dataset.
 
 Stages (each committed as a snapshot with lineage; resumable):
-  1. extract: html -> text (byte-identical invariant) + geo anchors,
-     one mapInPandas pass (Arrow batches, zero per-row Python)
-  2. index: per-anchor rows gain res0..res9 hex cells (independent
-     assignment per res - the reference's point-dataset convention,
-     dataset_utilities.py:10-16) + int64 cell9/p1/p2 join keys
-  3. write: salted repartition on the res-1 parent cell (north_rule skew
+  1. extract + index: ONE fused mapInArrow pass (extract_index_clip, the
+     engine's only page indexer) finds the geo anchors in the raw html
+     and gives each anchor row res0..res9 cells (independent assignment
+     per res - the reference's point-dataset convention,
+     dataset_utilities.py:10-16) + int64 cell9/p1 join keys
+  2. write: salted repartition on the res-1 parent cell (north_rule skew
      handling: dense city clusters all land in few parents; salt spreads
      each hot parent over `salt` writer tasks), partitioned layout by p1
      -> partition pruning for radius/region queries.
@@ -28,7 +28,8 @@ POINTS_SCHEMA = ("url string, warc_ts timestamp, lang string, "
 
 
 def extract_points(pages: DataFrame) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) -> one row per geo anchor."""
+    """pages(url, warc_ts, html, text, lang) -> one row per geo anchor.
+    With assign_cells, the two-stage reference for tests and benchmark."""
     def gen(batches):
         for pdf in batches:
             rows, lat, lng = textf.extract_geo_anchors(pdf["html"])
@@ -49,8 +50,8 @@ def _hex_str(col):
     return F.lower(F.hex(col))
 
 
-def _with_res_strings(df: DataFrame, max_res: int, parent_res: int,
-                      keep_int_cells: bool = False) -> DataFrame:
+def _with_res_strings(df: DataFrame, max_res: int,
+                      parent_res: int) -> DataFrame:
     """render res0..res{max_res} string columns from the int64 cell
     columns emitted by the Python stage, preserving the legacy column
     order (POINTS_SCHEMA, res0..res{max_res}, cell{max_res},
@@ -62,8 +63,6 @@ def _with_res_strings(df: DataFrame, max_res: int, parent_res: int,
     cols = ([F.col(c) for c in base]
             + [_hex_str(F.col(f"icell{r}")).alias(f"res{r}")
                for r in range(max_res + 1)]
-            + ([F.col(f"icell{r}").alias(f"cell{r}")
-                for r in range(max_res)] if keep_int_cells else [])
             + [F.col(f"icell{max_res}").alias(f"cell{max_res}"),
                F.col(f"p{parent_res}")]
             + [F.col(c) for c in extras])
@@ -77,7 +76,8 @@ def assign_cells(points: DataFrame, max_res: int = 9,
     spherical projection across resolutions, each res still assigned
     independently — the reference's point-dataset convention); the string
     renderings are JVM `lower(hex(...))` projections, so they cost nothing
-    when pruned and no Python string objects ever cross Arrow."""
+    when pruned and no Python string objects ever cross Arrow. Reference
+    path for tests and benchmark; the engine runs extract_index_clip."""
     int_fields = ", ".join(f"icell{r} long" for r in range(max_res + 1))
     schema = f"{POINTS_SCHEMA}, {int_fields}, p{parent_res} long"
 
@@ -99,16 +99,21 @@ def assign_cells(points: DataFrame, max_res: int = 9,
     return _with_res_strings(raw, max_res, parent_res)
 
 
+def salted_points(pages: DataFrame, max_res: int = 9, parent_res: int = 1,
+                  salt: int = 8) -> DataFrame:
+    """indexed anchor rows, salted on the parent cell for a write
+    partitioned by p{parent_res}: hot city parents spread over `salt`
+    writer tasks, cold parents coalesce (AQE)."""
+    return extract_index_clip(pages, max_res, parent_res).repartition(
+        F.col(f"p{parent_res}"),
+        F.pmod(F.xxhash64("url"), F.lit(int(salt))))
+
+
 def index_pages(catalog, pages: DataFrame, dataset="page_points",
                 max_res: int = 9, parent_res: int = 1, salt: int = 8,
                 register=True, lineage=None):
     """full pipeline; returns (snapshot_id, row_count)."""
-    pts = assign_cells(extract_points(pages), max_res, parent_res)
-    # salted repartition on the parent cell: hot city parents spread over
-    # `salt` writer tasks, cold parents coalesce (AQE)
-    pts = pts.repartition(
-        F.col(f"p{parent_res}"),
-        F.pmod(F.xxhash64("url"), F.lit(int(salt))))
+    pts = salted_points(pages, max_res, parent_res, salt)
     sid = catalog.write(
         dataset, pts, mode="overwrite", partition_by=[f"p{parent_res}"],
         lineage=dict(lineage or {}, stage="index_pages", max_res=max_res,
@@ -143,8 +148,9 @@ def extract_index_clip(pages: DataFrame, max_res: int = 9,
                        parent_res: int = 1, packed_bc=None,
                        bbox=None, clip_filter=True) -> DataFrame:
     """FUSED hot path: extract text anchors + assign res0..max_res cells
-    (+ optional bbox/PIP against broadcast polygons) in ONE mapInPandas
-    pass.
+    (+ optional bbox/PIP against broadcast polygons) in ONE mapInArrow
+    pass. This is the engine's only page indexer; with no polygons its
+    rows equal assign_cells(extract_points(pages)).
 
     Chaining mapInPandas/ArrowEval operators stacks one Python worker per
     operator per task (3 chained stages = 3x workers contending for the

@@ -7,8 +7,9 @@ scope. This module keeps the seam so incremental ingest can be switched
 on without touching the index pipeline:
 
 * pages arrive as parquet files in a landing directory
-* readStream -> the SAME extract/assign stages (mapInPandas works
-  unchanged under Structured Streaming)
+* readStream -> the SAME fused extract+index pass as batch
+  (extract_index_clip; its mapInArrow runs unchanged under Structured
+  Streaming)
 * foreachBatch commits each micro-batch as an APPEND snapshot to the
   catalog -> downstream batch queries time-travel as usual, and the
   streaming checkpoint + snapshot lineage together give exactly-once
@@ -17,7 +18,7 @@ on without touching the index pipeline:
 
 from __future__ import annotations
 
-from ..operators.index_pages import assign_cells, extract_points
+from ..operators.index_pages import extract_index_clip
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -32,8 +33,7 @@ def stream_index_pages(spark, catalog, landing_dir: str, checkpoint_dir: str,
     pages = (spark.readStream.schema(PAGES_SCHEMA)
              .option("maxFilesPerTrigger", 64)
              .parquet(landing_dir))
-    pts = assign_cells(extract_points(pages), max_res=max_res,
-                       parent_res=parent_res)
+    pts = extract_index_clip(pages, max_res=max_res, parent_res=parent_res)
 
     def commit(batch_df, batch_id):
         catalog.write(

@@ -37,18 +37,17 @@ def _update_cell_totals(key, pdfs, state: GroupState):
 def stream_cell_totals(spark, landing_dir: str, checkpoint_dir: str,
                        out_sink, max_res: int = 7, parent_res: int = 1,
                        available_now: bool = True):
-    """landing pages -> extract+assign (same stages as batch) ->
+    """landing pages -> fused extract+index (same pass as batch) ->
     per-parent running totals with keyed state; out_sink(batch_df, bid)
     receives each micro-batch's updated rows."""
-    from ..operators.index_pages import assign_cells, extract_points
+    from ..operators.index_pages import extract_index_clip
     from ..sources.pages import PAGES_SCHEMA
 
     from pyspark.sql import functions as F
 
     pages = (spark.readStream.schema(PAGES_SCHEMA)
              .option("maxFilesPerTrigger", 64).parquet(landing_dir))
-    pts = assign_cells(extract_points(pages), max_res=max_res,
-                       parent_res=parent_res)
+    pts = extract_index_clip(pages, max_res=max_res, parent_res=parent_res)
     pts = pts.select(F.col(f"p{parent_res}").alias("p1"))
     totals = pts.groupBy("p1").applyInPandasWithState(
         _update_cell_totals, OUT_SCHEMA, STATE_SCHEMA,

@@ -9,15 +9,16 @@ the window end — pages later than the watermark are dropped by Spark's
 state eviction, which is what bounds state size at 10^12-row scale
 (without a watermark the window state grows forever).
 
-The batch stages are reused unchanged (extract_points mapInPandas runs
-under Structured Streaming); only the groupBy gains window(warc_ts).
+The batch indexer is reused unchanged (the extract_index_clip mapInArrow
+pass runs under Structured Streaming and supplies the parent cell);
+only the groupBy gains window(warc_ts).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..operators.index_pages import extract_points
+from ..operators.index_pages import extract_index_clip
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -30,15 +31,10 @@ def stream_windowed_cell_counts(spark, landing_dir: str,
     """landing pages -> geo anchors -> per-(event-time window, parent
     cell) counts; finalized windows are appended to out_sink(batch_df,
     batch_id). Returns the started query."""
-    from ..functions.spark_udfs import cell_to_parent_expr, make_latlng_to_cell
     pages = (spark.readStream.schema(PAGES_SCHEMA)
              .option("maxFilesPerTrigger", 64).parquet(landing_dir))
-    pts = extract_points(pages)
-    to9 = make_latlng_to_cell(9)
-    pts = pts.withColumn("cell9", to9(F.col("latitude"),
-                                      F.col("longitude")))
-    pts = pts.withColumn(
-        "parent", cell_to_parent_expr("cell9", parent_res))
+    pts = extract_index_clip(pages, parent_res=parent_res).select(
+        "warc_ts", F.col(f"p{parent_res}").alias("parent"))
     agg = (pts.withWatermark("warc_ts", watermark)
            .groupBy(F.window("warc_ts", window).alias("w"), "parent")
            .agg(F.count("*").alias("n_anchors"))

@@ -1,20 +1,42 @@
 """End-to-end pages -> H3 index pipeline (the north-metric path):
 extract_text invariant, anchor extraction, res0-9 assignment, salted
 partitioned snapshot write, catalog queries over the result, determinism
-across partitioning layouts, snapshot time travel.
+across partitioning layouts, snapshot time travel, and equality of the
+fused indexer with the two-stage reference on malformed pages.
 """
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from osc_geo_h3grid_srv_spark.functions import h3core
+from osc_geo_h3grid_srv_spark.functions import text as textf
 from osc_geo_h3grid_srv_spark.operators.index_pages import (
-    extract_points, index_pages, text_invariant_violations)
+    assign_cells, extract_index_clip, extract_points, index_pages,
+    text_invariant_violations)
 from osc_geo_h3grid_srv_spark.sources.pages import (
-    pages_dataframe, synthesize_pages_pdf)
+    PAGES_SCHEMA, pages_dataframe, synthesize_pages_pdf)
 
 N_PAGES = 5000
+
+
+def _geo(lat, lng):
+    return f'<span class="geo">{lat},{lng}</span>'
+
+
+# anchors the generator never writes: an overlong (27-digit) latitude,
+# Arabic-Indic digits, |lat| > 90 / |lng| > 180, null and empty html
+MALFORMED_HTML = [None if h is None else h.encode() for h in [
+    f"<p>{_geo('123456789012345678901234567.123456', '13.400000')}</p>",
+    f"<p>{_geo('٥٢.520000', '13.400000')}</p>",
+    f"<p>{_geo('95.000000', '500.000000')}"
+    f"{_geo('-90.000001', '1.000000')}</p>",
+    None,
+    "",
+    f"<p>{_geo('52.520000', '13.400000')}{_geo('-33.870001', '151.200000')}"
+    f"{_geo('-91.250000', '-181.000000')}</p>",
+]]
 
 
 @pytest.fixture(scope="module")
@@ -75,14 +97,57 @@ def test_index_pipeline_and_queries(engine, pages):
 
 def test_determinism_across_layouts(engine, spark):
     """same input partitioned differently -> identical indexed rows
-    (north_rule: identical cell assignments at both parallelism levels)."""
+    (north_rule: identical cell assignments at both parallelism levels),
+    on the two-stage reference and on the fused indexer."""
     a = extract_points(pages_dataframe(spark, 800, partitions=2))
     b = extract_points(pages_dataframe(spark, 800, partitions=7))
-    from osc_geo_h3grid_srv_spark.operators.index_pages import assign_cells
     pa = assign_cells(a).orderBy("url", "latitude").toPandas()
     pb = assign_cells(b).orderBy("url", "latitude").toPandas()
     assert (pa["res9"].values == pb["res9"].values).all()
     assert (pa["cell9"].values == pb["cell9"].values).all()
+    fa = extract_index_clip(pages_dataframe(spark, 800, partitions=2))
+    fb = extract_index_clip(pages_dataframe(spark, 800, partitions=7))
+    fa = fa.orderBy("url", "latitude").toPandas()
+    fb = fb.orderBy("url", "latitude").toPandas()
+    assert (fa["res9"].values == fb["res9"].values).all()
+    assert (fa["cell9"].values == fb["cell9"].values).all()
+
+
+def test_anchor_kernels_agree_on_malformed():
+    """the pandas kernel (reference) and the Arrow kernel (engine) return
+    the same anchors for malformed pages, without Spark."""
+    import pyarrow as pa
+    want = textf.extract_geo_anchors(pd.Series(MALFORMED_HTML, dtype=object))
+    got = textf.extract_geo_anchors_arrow(pa.array(MALFORMED_HTML,
+                                                   pa.binary()))
+    for w, g in zip(want, got):
+        np.testing.assert_array_equal(w, g)
+    rows, lat, lng = got
+    # non-ASCII digits are not an anchor; the overlong latitude parses
+    # at full width
+    assert rows.tolist() == [0, 2, 2, 5, 5, 5]
+    assert lat[0] == float("123456789012345678901234567.123456")
+
+
+def test_fused_equals_two_stage(spark, pages):
+    """the fused indexer the engine runs returns exactly the rows of the
+    two-stage reference, on generated and malformed pages."""
+    bad = spark.createDataFrame(pd.DataFrame({
+        "url": [f"https://bad.example/{i}"
+                for i in range(len(MALFORMED_HTML))],
+        "warc_ts": pd.Timestamp("2024-01-01"),
+        "html": MALFORMED_HTML,
+        "text": "",
+        "lang": "en"}), PAGES_SCHEMA)
+    both = pages.unionByName(bad)
+    keys = ["url", "latitude", "longitude"]
+    want = (assign_cells(extract_points(both)).toPandas()
+            .sort_values(keys).reset_index(drop=True))
+    got = (extract_index_clip(both).toPandas()
+           .sort_values(keys).reset_index(drop=True))
+    assert len(want) > N_PAGES * 0.9
+    assert want["url"].str.startswith("https://bad.example/").sum() == 6
+    pd.testing.assert_frame_equal(want, got)
 
 
 def test_snapshot_time_travel(engine, spark):
