@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions import geo, h3core
 from ..functions.spark_udfs import reference_radius_expr
+from ..sources.catalog import interval_of
 
 CELL_COL = "h3_cell"  # reference const.py:11
 
@@ -89,7 +90,7 @@ class DatasetQueries:
         self.catalog = catalog
         self.dataset = dataset
         self.meta = catalog.get_ds_metadata(dataset)
-        self.interval = catalog.ds_interval(dataset)
+        self.interval = interval_of(self.meta["key_columns"])
         # the reference's projection re-selects latitude/longitude when they
         # also appear in value_columns (flood datasets do), emitting
         # duplicate columns that _row_to_cell_out then reads positionally
@@ -102,29 +103,38 @@ class DatasetQueries:
     def load(self):
         return self.catalog.load(self.dataset)
 
-    def _timed(self, year, month, day):
-        return _time_filter(self.load(), self.interval, year, month, day)
+    def _timed(self, year, month, day, bbox=None):
+        """the time-filtered DataFrame. With a query bbox
+        (la_min, la_max, lo_min, lo_max) on a p{r}-partitioned dataset,
+        the files are planned from the HEAD manifest first: only the
+        partitions _partition_prune keeps are read, and the same IN
+        filter stays on the pruned DataFrame. One manifest read serves
+        both the planning and the load."""
+        man = self.catalog.read_manifest(self.dataset)
+        parts = None if bbox is None else self._partition_prune(man, *bbox)
+        df = _time_filter(self.catalog.frame(man, parts), self.interval,
+                          year, month, day)
+        for col, vals in (parts or {}).items():
+            df = df.filter(F.col(col).isin(sorted(vals)))
+        return df
 
-    def _partition_prune(self, df, la_min, la_max, lo_min, lo_max):
-        """manual partition pruning through the UDF boundary (SURVEY.md
-        SS4.2 item 2): when the dataset is laid out partitioned by a
-        parent-cell column p{r} (index_pages), compute the parent cells
-        that can intersect the query bbox in the DRIVER (tiny kernel
-        call) and filter with an IN-list of literals — Spark prunes
-        whole partition directories before reading any footer.
-        polyfill_candidates over-covers (every cell intersecting the
-        bbox holds a sample point), so pruning never drops a matching
-        row.
+    @staticmethod
+    def _partition_prune(man, la_min, la_max, lo_min, lo_max):
+        """partition pruning planned from the manifest (SURVEY.md SS4.2
+        item 2): when the dataset is laid out partitioned by a
+        parent-cell column p{r} (index_pages), compute in the DRIVER
+        (tiny kernel call) the parent cells that can intersect the query
+        bbox -> {p{r}: candidate cells}, or None when no partition column
+        is a parent cell. Catalog.frame reads only the manifest files of
+        those partitions, and _timed then filters with an IN-list of the
+        same literals. polyfill_candidates over-covers (every cell
+        intersecting the bbox holds a sample point), so pruning never
+        drops a matching row.
 
         Wrap handling: a bbox that crosses the antimeridian (lo_min <
         -180 or lo_max > 180) is split into both longitude segments; a
         bbox reaching over a pole covers every longitude."""
         import re as _re
-        try:
-            pb = self.catalog.read_manifest(self.dataset).get(
-                "partition_by") or []
-        except (KeyError, FileNotFoundError):
-            return df
         if la_max > 90.0 or la_min < -90.0:  # over a pole: all lngs
             lo_min, lo_max = -180.0, 180.0
             la_min, la_max = max(la_min, -90.0), min(la_max, 90.0)
@@ -136,17 +146,18 @@ class DatasetQueries:
             boxes.append((la_min, la_max, -180.0, lo_max - 360.0))
             lo_max = 180.0
         boxes.append((la_min, la_max, lo_min, lo_max))
-        for col in pb:
+        parts = {}
+        for col in man["partition_by"]:
             m = _re.fullmatch(r"p(\d{1,2})", col)
-            if not m or col not in df.columns:
+            if not m:
                 continue
             vals = set()
             for (a0, a1, o0, o1) in boxes:
                 cells = h3core.polyfill_candidates(
                     a0, a1, o0, o1, int(m.group(1)))
                 vals.update(int(v) for v in cells.view(np.int64))
-            df = df.filter(F.col(col).isin(sorted(vals)))
-        return df
+            parts[col] = vals
+        return parts or None
 
     # -- radius queries (geomesh.py:539-576 / 480-537 / 417-478) ------------
 
@@ -156,13 +167,13 @@ class DatasetQueries:
         lat/lng lies within radius_km of the given point."""
         if self.ds_type not in ("h3", "h3_index"):
             raise ValueError(f"dataset {self.dataset} is not h3/h3_index")
-        df = self._timed(year, month, day)
         r = _radius_guard(radius_km, resolution, is_point_dataset=False)
+        # h3 datasets carry cell-centroid latitude/longitude, so the
+        # same cap-bbox partition pruning as the point path applies
+        # (round 2: previously only the point path pruned)
+        df = self._timed(year, month, day, None if r is None
+                         else self._radius_bbox(lat, lng, r))
         if r is not None:
-            # h3 datasets carry cell-centroid latitude/longitude, so the
-            # same cap-bbox partition pruning as the point path applies
-            # (round 2: previously only the point path pruned)
-            df = self._partition_prune(df, *self._radius_bbox(lat, lng, r))
             df = df.filter(
                 reference_radius_expr("latitude", "longitude", lat, lng)
                 <= F.lit(r))
@@ -193,10 +204,10 @@ class DatasetQueries:
         """POST /api/datasets/point/latlong/radius/{ds}."""
         if self.ds_type != "point":
             raise ValueError(f"dataset {self.dataset} is not a point dataset")
-        df = self._timed(year, month, day)
         r = _radius_guard(radius_km, 0, is_point_dataset=True)
+        df = self._timed(year, month, day, None if r is None
+                         else self._radius_bbox(lat, lng, r))
         if r is not None:
-            df = self._partition_prune(df, *self._radius_bbox(lat, lng, r))
             df = df.filter(
                 reference_radius_expr("latitude", "longitude", lat, lng)
                 <= F.lit(r))
@@ -235,14 +246,13 @@ class DatasetQueries:
         query cell's resolution (geomesh.py:836-855)."""
         cid = h3core.string_to_cell(np.array([cell_hex]))
         res = int(h3core.get_resolution(cid)[0])
-        df = self._timed(year, month, day)
+        bverts = h3core.cell_boundary(cid)[0]  # (6, 2) lat,lng
+        df = self._timed(year, month, day, (
+            float(bverts[:, 0].min()), float(bverts[:, 0].max()),
+            float(bverts[:, 1].min()), float(bverts[:, 1].max())))
         col = f"res{res}"
         if col not in df.columns:
             raise ValueError(f"dataset has no {col} column")
-        bverts = h3core.cell_boundary(cid)[0]  # (6, 2) lat,lng
-        df = self._partition_prune(
-            df, float(bverts[:, 0].min()), float(bverts[:, 0].max()),
-            float(bverts[:, 1].min()), float(bverts[:, 1].max()))
         df = df.filter(F.col(col) == F.lit(cell_hex))
         return _select_points(df, self.value_columns)
 
@@ -266,9 +276,8 @@ class DatasetQueries:
         set equals a lat/lng BETWEEN filter on cell centroids when
         exact_cells=False (cheap path). exact_cells=True reproduces the
         polyfill->membership semantics (centroid-in-bbox of cells)."""
-        df = self._timed(year, month, day)
-        df = self._partition_prune(df, float(lat_min), float(lat_max),
-                                   float(lng_min), float(lng_max))
+        df = self._timed(year, month, day, (
+            float(lat_min), float(lat_max), float(lng_min), float(lng_max)))
         cond = (F.col("latitude").between(float(lat_min), float(lat_max))
                 & F.col("longitude").between(float(lng_min), float(lng_max)))
         df = df.filter(cond)
@@ -310,9 +319,8 @@ class DatasetQueries:
                 raise ValueError(f"region {region!r} not in shapefile")
             polygons = polygons.filter_name(region)
         la_min, la_max, lo_min, lo_max = polygons.bounds()
-        df = self._timed(year, month, day)
-        df = self._partition_prune(df, float(la_min), float(la_max),
-                                   float(lo_min), float(lo_max))
+        df = self._timed(year, month, day, (
+            float(la_min), float(la_max), float(lo_min), float(lo_max)))
         df = df.filter(
             F.col("latitude").between(float(la_min), float(la_max))
             & F.col("longitude").between(float(lo_min), float(lo_max)))

@@ -7,6 +7,10 @@ with an Iceberg-style warehouse over Parquet:
 * immutable snapshots, atomic commit via manifest JSON + HEAD pointer
   rename (os.replace is atomic on POSIX)
 * time travel: load(table, snapshot_id)
+* file planning from the manifest: load(table, partitions={col: values})
+  builds the DataFrame over only the files whose recorded hive partition
+  value (parsed by the manifest schema's type) is in the set, so Spark
+  never lists the rest; callers keep their own filter on the column
 * per-partition lineage + row counts + wall clock in every manifest
   (BASELINE.json north_rule: "resumable from snapshot checkpoints with
   per-partition lineage and metrics")
@@ -32,6 +36,7 @@ import os
 import re
 import time
 import uuid
+from urllib.parse import unquote
 
 VALID_DATASET_TYPES = ["h3", "point", "h3_index"]
 
@@ -93,6 +98,33 @@ def validate_column_name(name: str):
     if not _NAME_RE.match(name):
         raise ValueError(
             f"invalid column name {name!r}: only [A-Za-z0-9_] allowed")
+
+
+_INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
+
+
+def _partition_value(raw, spark_type):
+    """a manifest's hive partition string as a value of the column's
+    type (integral columns as int, others as the unescaped string Spark
+    wrote with %XX escapes); None for a null partition."""
+    if raw == "__HIVE_DEFAULT_PARTITION__":
+        return None
+    if spark_type in _INTEGRAL:
+        return int(raw)
+    return unquote(raw)
+
+
+def interval_of(key_columns) -> str:
+    """time interval inferred from key columns (geomesh.py:225-233):
+    day+month+year -> daily; month+year -> monthly; year -> yearly;
+    none -> one_time."""
+    if "day" in key_columns:
+        return "daily"
+    if "month" in key_columns:
+        return "monthly"
+    if "year" in key_columns:
+        return "yearly"
+    return "one_time"
 
 
 class Catalog:
@@ -226,17 +258,43 @@ class Catalog:
                             "bytes": os.path.getsize(p), "partition": pvals})
         return out
 
-    def load(self, table, snapshot=None):
+    def load(self, table, snapshot=None, partitions=None):
         """DataFrame over exactly the manifest's files (time travel).
-        With schema evolution (round 4) the files of one snapshot may
-        disagree on columns; mergeSchema unifies them (absent columns
-        read NULL) and the manifest's recorded schema pins the column
-        SET and ORDER each snapshot exposes — an old snapshot never
-        shows a column added later."""
-        man = self.read_manifest(table, snapshot)
-        df = self._df_for_files(table, man["files"],
-                                man["partition_by"])
+        partitions={column: values} keeps only the files whose partition
+        value is in the set (see plan_files)."""
+        return self.frame(self.read_manifest(table, snapshot), partitions)
+
+    @staticmethod
+    def plan_files(man, partitions=None):
+        """the manifest files a read with `partitions` covers: each file
+        whose hive partition value, parsed by the column's type in the
+        manifest schema, is in the column's set, for every column given.
+        A null partition value (__HIVE_DEFAULT_PARTITION__) is never
+        selected, as an IN filter never matches null. Pure metadata."""
+        if partitions is None:
+            return man["files"]
+        types = {c["name"]: c["type"] for c in man.get("schema") or []}
+        return [f for f in man["files"]
+                if all(_partition_value(f["partition"][c], types.get(c))
+                       in vals
+                       for c, vals in partitions.items())]
+
+    def frame(self, man, partitions=None):
+        """load() over a manifest already read. With schema evolution
+        (round 4) the files of one snapshot may disagree on columns;
+        mergeSchema unifies them (absent columns read NULL) and the
+        manifest's recorded schema pins the column SET and ORDER each
+        snapshot exposes — an old snapshot never shows a column added
+        later. No planned file gives an empty DataFrame of that
+        schema."""
+        files = self.plan_files(man, partitions)
         schema = man.get("schema")
+        if not files and schema:
+            df = self.spark.createDataFrame([], ", ".join(
+                f"`{c['name']}` {c['type']}" for c in schema))
+        else:
+            df = self._df_for_files(man["table"], files,
+                                    man["partition_by"])
         if schema:
             from pyspark.sql import functions as F
             have = set(df.columns)
@@ -467,14 +525,5 @@ class Catalog:
         return self.spark.createDataFrame([Row(**r) for r in rows])
 
     def ds_interval(self, dataset_name):
-        """time interval inferred from key columns (geomesh.py:225-233):
-        day+month+year -> daily; month+year -> monthly; year -> yearly;
-        none -> one_time."""
-        keys = self.get_ds_metadata(dataset_name)["key_columns"]
-        if "day" in keys:
-            return "daily"
-        if "month" in keys:
-            return "monthly"
-        if "year" in keys:
-            return "yearly"
-        return "one_time"
+        """the registered dataset's time interval (see interval_of)."""
+        return interval_of(self.get_ds_metadata(dataset_name)["key_columns"])

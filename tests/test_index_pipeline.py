@@ -305,6 +305,161 @@ def test_partition_pruning_near_pole_radius(engine, spark):
         assert n_brute > 0
 
 
+@pytest.fixture(scope="module")
+def pp_prune(engine, pages):
+    index_pages(engine.catalog, pages, dataset="pp_prune",
+                max_res=9, parent_res=1, salt=2)
+    return engine.queries("pp_prune")
+
+
+def _sorted_pdf(df, columns):
+    pdf = df[columns] if isinstance(df, pd.DataFrame) else \
+        df.select(*columns).toPandas()
+    return pdf.sort_values(columns).reset_index(drop=True)
+
+
+def assert_pruned_equals_brute(q, df, brute):
+    """`df` reads fewer files than the snapshot holds and returns the
+    same non-empty rows as `brute`, an unpruned filter over q.load()
+    (a Spark or pandas DataFrame)."""
+    n_files = len(q.catalog.read_manifest(q.dataset)["files"])
+    assert 0 < len(df.inputFiles()) < n_files
+    got = _sorted_pdf(df, df.columns)
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, _sorted_pdf(brute, df.columns))
+
+
+def test_pruned_builders_match_brute(pp_prune):
+    """every builder that plans its files from the manifest returns the
+    rows of a brute filter over the whole snapshot, from fewer files."""
+    from osc_geo_h3grid_srv_spark.functions import geo
+    from osc_geo_h3grid_srv_spark.functions.spark_udfs import (
+        reference_radius_expr)
+    q = pp_prune
+    full = q.load()
+
+    def within(lat, lng, r):
+        return full.filter(
+            reference_radius_expr("latitude", "longitude", lat, lng)
+            <= F.lit(r))
+
+    assert_pruned_equals_brute(q, q.latlong_radius_point(52.52, 13.40, 300.0),
+                               within(52.52, 13.40, 300.0))
+
+    cell7 = h3core.latlng_to_cell(np.array([52.52]), np.array([13.40]), 7)
+    clat, clng = h3core.cell_to_latlng(cell7)
+    assert_pruned_equals_brute(
+        q, q.cell_radius_point(h3core.cell_to_string(cell7)[0], 200.0),
+        within(float(clat[0]), float(clng[0]), 200.0))
+
+    res7 = full.filter(F.col("latitude").between(52.0, 53.0)).first()["res7"]
+    assert_pruned_equals_brute(q, q.cell_point_point(res7),
+                               full.filter(F.col("res7") == res7))
+
+    assert_pruned_equals_brute(
+        q, q.bounding_box(51.0, 54.0, 12.0, 15.0),
+        full.filter(F.col("latitude").between(51.0, 54.0)
+                    & F.col("longitude").between(12.0, 15.0)))
+
+    poly = geo.PackedPolygons.from_latlng_rings(
+        [[[(51.5, 12.0), (53.5, 12.5), (52.8, 15.0), (51.5, 12.0)]]],
+        names=["tri"])
+    got = q.shapefile_point(poly, region="tri")
+    pdf = full.toPandas()
+    inside = geo.points_in_polys(pdf["latitude"].values,
+                                 pdf["longitude"].values, poly)
+    assert_pruned_equals_brute(q, got, pdf[inside])
+
+
+def test_mid_ocean_radius_is_empty(pp_prune):
+    """no manifest file can match a mid-Pacific radius query: the load is
+    an empty DataFrame with the columns and types of a non-empty one."""
+    q = pp_prune
+    empty = q.latlong_radius_point(5.0, -170.0, 50.0)
+    assert empty.inputFiles() == []
+    assert empty.count() == 0
+    assert empty.dtypes == q.latlong_radius_point(52.52, 13.40, 50.0).dtypes
+
+
+def test_point_routes_read_manifest_and_metadata_once(engine, pp_prune,
+                                                      monkeypatch):
+    """building a point-route DataFrame reads the HEAD manifest once
+    (planning and load share it) and dataset_metadata.json once."""
+    from osc_geo_h3grid_srv_spark.functions import geo
+    from osc_geo_h3grid_srv_spark.sources.catalog import Catalog
+    calls = {"read_manifest": 0, "_read_meta": 0}
+    for name in calls:
+        orig = getattr(Catalog, name)
+
+        def counted(self, *a, _orig=orig, _name=name, **kw):
+            calls[_name] += 1
+            return _orig(self, *a, **kw)
+        monkeypatch.setattr(Catalog, name, counted)
+    cell = h3core.cell_to_string(h3core.latlng_to_cell(
+        np.array([52.52]), np.array([13.40]), 7))[0]
+    poly = geo.PackedPolygons.from_latlng_rings(
+        [[[(52.0, 13.0), (53.0, 13.0), (53.0, 14.0), (52.0, 14.0)]]],
+        names=["box"])
+    for build in (lambda: engine.radius("pp_prune", 52.52, 13.40, 20.0),
+                  lambda: engine.cell_radius("pp_prune", cell, 20.0),
+                  lambda: engine.cell_point("pp_prune", cell),
+                  lambda: engine.shapefile_get("pp_prune", poly, "box")):
+        for name in calls:
+            calls[name] = 0
+        build()
+        assert calls == {"read_manifest": 1, "_read_meta": 1}
+
+
+@pytest.fixture(scope="module")
+def edge_pts(engine, spark):
+    """points on both sides of the antimeridian, in a north polar cap and
+    scattered over the globe, partitioned by their res-1 parent."""
+    rng = np.random.RandomState(5)
+    dl_a, dl_o = np.meshgrid(np.arange(-2.0, 2.01, 0.25),
+                             np.concatenate([np.arange(177.0, 180.0, 0.25),
+                                             np.arange(-180.0, -177.0, 0.25)]))
+    po_a, po_o = np.meshgrid(np.arange(88.2, 89.81, 0.1),
+                             np.arange(-180.0, 180.0, 2.5))
+    la = np.concatenate([dl_a.ravel(), po_a.ravel(),
+                         rng.uniform(-80.0, 80.0, 300)])
+    lo = np.concatenate([dl_o.ravel(), po_o.ravel(),
+                         rng.uniform(-180.0, 180.0, 300)])
+    cells9 = h3core.latlng_to_cell(la, lo, 9)
+    pdf = pd.DataFrame({
+        "latitude": la, "longitude": lo,
+        "res9": h3core.cell_to_string(cells9),
+        "p1": h3core.cell_to_parent(cells9, 1).view(np.int64),
+        "val": np.arange(len(la), dtype=np.float64)})
+    engine.catalog.write("edge_pts", spark.createDataFrame(pdf),
+                         mode="overwrite", partition_by=["p1"])
+    try:
+        engine.catalog.add_meta(
+            "edge_pts", "antimeridian, polar and global test points",
+            key_columns={"latitude": "REAL", "longitude": "REAL"},
+            value_columns={"val": "REAL"}, dataset_type="point")
+    except ValueError:
+        pass
+    return engine.queries("edge_pts")
+
+
+@pytest.mark.parametrize("lat,lng,r", [
+    (0.0, 179.9, 150.0),    # bbox split at the antimeridian
+    (89.5, 30.0, 120.0),    # the cap covers the pole: every longitude
+])
+def test_edge_radius_reads_fewer_files(edge_pts, lat, lng, r):
+    from osc_geo_h3grid_srv_spark.functions.spark_udfs import (
+        reference_radius_expr)
+    q = edge_pts
+    got = q.latlong_radius_point(lat, lng, r)
+    brute = q.load().filter(
+        reference_radius_expr("latitude", "longitude", lat, lng)
+        <= F.lit(r))
+    assert_pruned_equals_brute(q, got, brute)
+    if lat == 0.0:
+        lngs = [row["longitude"] for row in got.collect()]
+        assert min(lngs) < 0 < max(lngs)
+
+
 def test_outlinks_resolve_to_existing_pages(pages):
     # generator v2 plants 0-2 <a href> outlinks per page targeting
     # EARLIER page indices, so any generated prefix is a CLOSED link
