@@ -1,32 +1,58 @@
 """Benchmark harness (driver-run per round; also the local feedback loop).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE json
+Runs the headline items at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+test data, see SF_DIR) on local[<host cores>] with a quarter of host
+memory for the driver (perfbench.harness.HostShape) and prints ONE json
 line: {"metric": ..., "value": <total sec>, "unit": "sec",
 "queries": {name: sec}, "sf": ..., "pages_per_sec": ...}.
+
+Every timed item (the flagship, the two 1M-asset correlator items and
+each registry entry) runs REPS times through one rep loop; its timing is
+the median and every rep is kept under "rep_secs". The flagship and the
+correlator items get one untimed warm-up first.
 
 The flagship measures the BASELINE.json north metric end to end:
 deterministic pages -> extract_text -> geo anchors -> H3 cells res 0-9 ->
 point-in-polygon clip -> IDW kNN interpolation onto res-5 cell centroids.
+
+Settings: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_PAGES (flagship pages) and
+SPARK_GRAFT_ONLY=name1,name2 (time only those suite entries; such a
+subset run does not write BENCH.json).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.harness import HostShape  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+HOST = HostShape.detect()
+CPUS = HOST.cores
 # pages scale: 1M pages at sf0.1 — large enough that the flagship's
 # fixed per-job floor (~2-4s of stage scheduling) is amortized and the
 # measured pages/sec reflects pipeline throughput, small enough that
 # generation (untimed) stays under ~30s
 _SF = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else 0.1
 N_PAGES = int(os.environ.get("SPARK_GRAFT_PAGES", str(int(10_000_000 * _SF))))
+# timed reps per item; the recorded timing is their median
+REPS = 3
+
+
+def time_reps(fn):
+    """REPS timed calls of fn: (wall seconds per call, outputs)."""
+    secs, outs = [], []
+    for _ in range(REPS):
+        t0 = time.time()
+        outs.append(fn())
+        secs.append(round(time.time() - t0, 3))
+    return secs, outs
 
 
 def prepare_pages(spark, n_pages):
@@ -70,9 +96,8 @@ def _flagship_pipeline(spark, pages_path):
     # region's cells, not just populated ones). The grid comes from the
     # driver-side kernel polyfill (~1 ms for ~10^3 cells) — round 1
     # derived it with distinct+coalesce(1) over the data, which added a
-    # serial micro-job to every run (the Amdahl floor in
-    # BENCH-SCALING.json); Arrow createDataFrame + broadcast join keep
-    # the big points side shuffle-free for the join.
+    # serial micro-job to every run; Arrow createDataFrame + broadcast
+    # join keep the big points side shuffle-free for the join.
     import pandas as pd
 
     from osc_geo_h3grid_srv_spark.functions import h3core
@@ -98,38 +123,24 @@ def main():
     from osc_geo_h3grid_srv_spark.engine import make_spark
     spark = make_spark(cores=CPUS, shuffle_partitions=max(CPUS * 2, 32),
                        extra_conf={"spark.ui.enabled": "false",
-                                   "spark.driver.memory": "48g"})
+                                   "spark.driver.memory":
+                                       f"{HOST.driver_memory_mb}m"})
     import __spark_entry__ as em
 
     timings = {}
     extras = {}
     rep_secs = {}
 
-    def run(name, fn, reps=2):
-        # best-of-N with the DataFrame lineage rebuilt per rep (fn()
-        # reconstructs the plan from the parquet scan each call, so no
-        # materialized-shuffle reuse poisons later reps — BASELINE.md
-        # protocol). Single-shot timings made r1->r2 comparisons pure
-        # host noise (VERDICT r02 What's-wrong #3); raw arrays recorded.
-        out = None
-        rs = []
-        for _ in range(reps):
-            t0 = time.time()
-            out = fn()
-            rs.append(round(time.time() - t0, 3))
-        # adaptive third rep: when the two reps disagree >2x the epoch
-        # moved mid-query (burstable host, BASELINE.md); one more rep
-        # keeps the min() estimate from being a pair of stalls. The r4/r5
-        # paired table's apparent 4-6x "regressions" (leakage_safe_split
-        # 9.7s, distance_pairs_join 8.2s) re-measured at 2.0s/3.2s at the
-        # same HEAD once warm — churn, not plans.
-        while max(rs) > 2.0 * min(rs) and len(rs) < reps + 2:
-            t0 = time.time()
-            out = fn()
-            rs.append(round(time.time() - t0, 3))
-        timings[name] = min(rs)
-        rep_secs[name] = rs
-        return out
+    def run(name, fn, warmup=False):
+        # the DataFrame lineage is rebuilt per call (fn() reconstructs
+        # the plan from the parquet scan), so no materialized-shuffle
+        # reuse carries over between reps; returns the last rep's output
+        if warmup:
+            fn()
+        secs, outs = time_reps(fn)
+        timings[name] = statistics.median(secs)
+        rep_secs[name] = secs
+        return outs[-1]
 
     # north-metric flagship (pages materialized untimed: production reads
     # the pages table from the lake; the metric is indexing throughput)
@@ -143,15 +154,9 @@ def main():
     t0 = time.time()
     _flagship_pipeline(spark, pages_path)
     extras["warmup_sec"] = round(time.time() - t0, 3)
-    # best-of-3: the sandbox host's deliverable CPU varies across epochs
-    # (see BASELINE.md); all rep times are recorded for auditability
-    reps = []
-    for _ in range(3):
-        t0 = time.time()
-        n_clip, n_interp = _flagship_pipeline(spark, pages_path)
-        reps.append(round(time.time() - t0, 3))
-    timings["flagship_index_pip_idw"] = min(reps)
-    extras["flagship_rep_secs"] = reps
+    n_clip, n_interp = run("flagship_index_pip_idw",
+                           lambda: _flagship_pipeline(spark, pages_path))
+    extras["flagship_rep_secs"] = rep_secs["flagship_index_pip_idw"]
     extras["flagship_pages"] = N_PAGES
     extras["flagship_clipped_points"] = n_clip
     extras["flagship_interp_cells"] = n_interp
@@ -207,22 +212,15 @@ def main():
                      | F.col("flood_risk_mean").isNull())
         return j.count()
 
-    correlator_1m()  # warm (worker pool for the res-7 UDF)
-    c_reps = []
-    for _ in range(2):
-        t0 = time.time()
-        matched = correlator_1m()
-        c_reps.append(round(time.time() - t0, 3))
-    timings["correlator_1m_assets"] = min(c_reps)
-    extras["correlator_1m_rep_secs"] = c_reps
-    extras["correlator_1m_matched"] = matched
+    # warm-up: worker pool for the res-7 UDF
+    extras["correlator_1m_matched"] = run(
+        "correlator_1m_assets", correlator_1m, warmup=True)
+    extras["correlator_1m_rep_secs"] = rep_secs["correlator_1m_assets"]
 
     # all-16-resolution cell assignment on 1M assets (the correlator's
     # _add_cells surface, VERDICT r01 next-step #5): one mapInPandas pass
-    # sharing the spherical projection across resolutions. Measured
-    # same-session interleaved best-of-4 vs the round-1 16-independent-
-    # UDF plan: 1.38s vs 1.88s (~1.4x) — rep spread on this host is 2-3x,
-    # raw reps recorded.
+    # sharing the spherical projection across resolutions, against the
+    # round-1 16-independent-UDF plan's 1.884s (32-vCPU host)
     def correlate_allres_1m():
         from osc_geo_h3grid_srv_spark.operators.correlate import (
             add_cell_columns)
@@ -230,92 +228,19 @@ def main():
         return a.select(F.max(F.xxhash64(
             *[f"cell_{r}" for r in range(16)]))).collect()
 
-    correlate_allres_1m()  # warm
-    ar_reps = []
-    for _ in range(2):
-        t0 = time.time()
-        correlate_allres_1m()
-        ar_reps.append(round(time.time() - t0, 3))
-    timings["correlate_allres_1m"] = min(ar_reps)
-    extras["correlate_allres_1m_rep_secs"] = ar_reps
+    run("correlate_allres_1m", correlate_allres_1m, warmup=True)
+    extras["correlate_allres_1m_rep_secs"] = rep_secs["correlate_allres_1m"]
     extras["correlate_allres_16udf_baseline_sec"] = 1.884
 
-    # operator queries (shared with the correctness gate). Since round
-    # 5 the list is DERIVED from the registry instead of maintained by
-    # hand (VERDICT r4 What's-wrong #4: 29 entries silently had no
-    # timing): every queries() entry is benched unless it appears in
-    # _BENCH_SKIP with a reason, and an entry that is neither benched
-    # nor skipped fails the run loudly. The legacy ordering below is
-    # kept for BENCH_r*.json row stability; registry entries not in it
-    # (including future adds) are appended in registry order.
-    heads = ["radius_reference", "grid_cell_agg", "correlator_null_filters",
-             "idw_knn", "raster_tile_agg", "exact_dedup",
-             "minhash_lsh_pairs", "simhash_pairs", "token_stats",
-             "embedding_cosine_threshold", "tpch_q1_pricing",
-             "broadcast_join_topn", "window_first_event",
-             "h3_index_documents", "polyfill_region_cells", "ann_topk_lsh",
-             "ann_topk_ivf", "bm25_topk", "training_mix_sample",
-             "sessionize_events", "bigram_counts", "docfreq_idf",
-             "csv_loader_index", "ivf_assign_counts",
-             "pii_redaction_stats", "repetition_ratio",
-             "image_decode_stats", "audio_decode_stats",
-             "dedup_clusters", "boilerplate_removal",
-             "span_dedup_coverage",
-             "contamination_flags", "quality_model_scores",
-             "pagerank_links", "chunk_documents", "pack_sequences",
-             "url_canonical_domains", "domain_rollup",
-             "bigram_lm_scores", "bpe_merges", "bpe_encode_counts",
-             "span_dedup_removal", "html_link_graph", "robots_exclusion",
-             "robots_wildcard_exclusion",
-             "inverted_index", "dsir_selection", "phrase_search",
-             "frontier_schedule", "shard_assignment", "corpus_drift",
-             "pq_adc_topk", "inlink_profile", "winnow_fingerprints",
-             "normalize_text", "hll_token_distinct",
-             "cms_term_frequencies", "frontier_timeline",
-             "jpeg_decode_stats", "gif_decode_stats",
-             "video_frame_stats", "g711_decode_stats",
-             "image_dhash_pairs", "image_dup_clusters", "audio_afp_pairs",
-             "bloom_membership",
-             "embedding_blocked_pairs", "hits_scores", "cdc_chunk_dedup",
-             "anchor_text_profile", "sitemap_seed_rollup",
-             "tpch_q3_shipping", "tpch_q5_local_supplier",
-             "h3_compact_cells", "triangle_counts_links",
-             "weighted_sample_by_lang", "allpairs_cosine_pairs",
-             "containment_pairs", "rrf_hybrid_topk", "collocations_g2",
-             "leakage_safe_split", "corpus_power_laws",
-             "gi_star_hotspots", "h3_hotspot_cells", "morans_i",
-             "zorder_layout_spans", "textrank_keywords",
-             "funnel_conversion", "cohort_retention", "lisa_clusters",
-             "hilbert_layout_spans", "distance_pairs_join",
-             "asof_join_events", "interval_overlap_join", "kcore_links",
-             "embedding_covariance", "dbscan_grid_clusters",
-             "timeseries_gapfill", "edge_jaccard_links", "knn_graph",
-             "burst_zscores",
-             # round-4 continuation, third wave
-             "trajectory_stats", "stay_points", "od_matrix_flows",
-             "nearest_neighbor_join", "ripleys_k",
-             "personalized_pagerank", "bfs_distances",
-             "c4_line_filters", "tfidf_top_terms", "ewma_hourly",
-             "cusum_hourly", "markov_transitions", "exact_quantiles",
-             "fuzzy_title_pairs", "geodesic_area", "skew_profile",
-             "distance_clusters", "session_paths", "link_reciprocity",
-             "events_rollup", "pivot_type_by_dom", "iqr_outliers",
-             # round-4 continuation, governance wave
-             "label_propagation", "assoc_rules", "scd2_history",
-             "constraint_audit", "snapshot_diff",
-             "attribution_last_touch"]
+    # operator queries (shared with the correctness gate): every
+    # queries() entry in registry order, unless _BENCH_SKIP names it
+    # with a reason
     qs = em.queries()
-    # every registry entry is benched unless skipped-with-reason here
     _BENCH_SKIP = {
         "pages_index_pipeline": "IS the flagship pipeline — already "
                                 "measured as flagship_index_pip_idw",
     }
-    heads += [n for n in qs if n not in heads and n not in _BENCH_SKIP]
-    unbenched = [n for n in qs if n not in heads and n not in _BENCH_SKIP]
-    stale = [n for n in heads if n not in qs]
-    if unbenched or stale:
-        raise SystemExit(f"bench.py heads out of sync with registry: "
-                         f"unbenched={unbenched} stale={stale}")
+    heads = [n for n in qs if n not in _BENCH_SKIP]
 
     def _force(df):
         # noop sink (round 4): count() is NOT a valid forcing function
@@ -336,21 +261,6 @@ def main():
         run(name, lambda f=qs[name]: _force(f(spark, SF_DIR)))
 
     extras["sink"] = "noop"
-    # same-epoch host-capacity stamp: the sandbox box's deliverable CPU
-    # swings up to 7x between epochs (BASELINE.md); a fixed-work pure-
-    # ALU probe at 8/32 workers records what the host could actually
-    # deliver WHILE this suite ran, so cross-round BENCH_r*.json
-    # comparisons can be epoch-adjusted instead of guessed at.
-    try:
-        sys.path.insert(0, os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "tools"))
-        from host_probe import _cpu_work, _pool_time
-        alu8, alu32 = _pool_time(_cpu_work, 8), _pool_time(_cpu_work, 32)
-        extras["host_probe"] = {
-            "alu_sec_8w": round(alu8, 2), "alu_sec_32w": round(alu32, 2),
-            "alu_eff_8_to_32": round(alu8 / alu32, 3)}
-    except Exception as exc:  # probe is diagnostic, never fatal
-        extras["host_probe"] = {"error": str(exc)}
     extras["rep_secs"] = rep_secs
     total = round(sum(timings.values()), 3)
     # HEADLINE SCALARS FIRST, bulky per-query dicts LAST: the driver
@@ -366,11 +276,14 @@ def main():
     ]
     record = {
         "metric": "H3-indexed pages/sec (cell assign + PIP + kNN "
-                  "interpolate) + operator suite",
+                  "interpolate) + operator suite; median of %d reps per "
+                  "item" % REPS,
         "value": total,
         "unit": "sec",
         "sf": _SF,
         "cpus": CPUS,
+        "driver_memory_mb": HOST.driver_memory_mb,
+        "reps": REPS,
         "flagship_sec": timings.get("flagship_index_pip_idw"),
         **{k: extras[k] for k in headline_keys if k in extras},
         "wall_total": round(time.time() - t_start, 3),

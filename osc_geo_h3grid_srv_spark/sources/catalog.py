@@ -114,6 +114,11 @@ def _partition_value(raw, spark_type):
     return unquote(raw)
 
 
+def _ddl(schema) -> str:
+    """a manifest schema ([{name, type}]) as a Spark DDL string."""
+    return ", ".join(f"`{c['name']}` {c['type']}" for c in schema)
+
+
 def interval_of(key_columns) -> str:
     """time interval inferred from key columns (geomesh.py:225-233):
     day+month+year -> daily; month+year -> monthly; year -> yearly;
@@ -179,7 +184,6 @@ class Catalog:
         writer.parquet(staging)
         files = self._scan_files(staging)
         parent = self.current_snapshot(table)
-        sid = 1 if parent is None else parent + 1
         schema = [{"name": f.name, "type": f.dataType.simpleString()}
                   for f in df.schema.fields]
         if mode == "append" and parent is not None:
@@ -187,19 +191,29 @@ class Catalog:
             files = pman["files"] + files
             schema = self._evolve_schema(table, pman.get("schema"),
                                          schema)
+        return self._commit(
+            table, parent, mode, partition_by or [], schema, files,
+            lineage or {}, dict(metrics or {}, commit_wall_clock_s=round(
+                time.time() - t0, 3)))
+
+    def _commit(self, table, parent, mode, partition_by, schema, files,
+                lineage, metrics):
+        """commit snapshot parent+1: manifest v{sid}.json written via tmp
+        + os.replace, then the HEAD pointer flipped the same way (a crash
+        between the two leaves the parent current). Returns the sid."""
+        sid = 1 if parent is None else parent + 1
         manifest = {
             "table": table,
             "snapshot_id": sid,
             "parent_snapshot_id": parent,
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "mode": mode,
-            "partition_by": partition_by or [],
+            "partition_by": partition_by,
             "schema": schema,
             "files": files,
             "total_rows": sum(f["rows"] for f in files),
-            "lineage": lineage or {},
-            "metrics": dict(metrics or {}, commit_wall_clock_s=round(
-                time.time() - t0, 3)),
+            "lineage": lineage,
+            "metrics": metrics,
         }
         mpath = self._manifest_path(table, sid)
         tmp = mpath + ".tmp"
@@ -216,12 +230,13 @@ class Catalog:
     def _evolve_schema(table, parent_schema, new_schema):
         """Iceberg-style additive schema evolution on append (round 4):
         new nullable columns are allowed (old files read them as NULL
-        via mergeSchema), columns absent from the incoming batch stay
-        in the table schema (new files read them as NULL), but a TYPE
-        conflict on a shared column is rejected — silent type widening
-        corrupts every downstream reader at 100 TB scale. The snapshot
-        schema is the parent order with genuinely-new columns appended,
-        so time travel shows each snapshot exactly the columns it had."""
+        under the snapshot schema), columns absent from the incoming
+        batch stay in the table schema (new files read them as NULL), but
+        a TYPE conflict on a shared column is rejected — silent type
+        widening corrupts every downstream reader at 100 TB scale. The
+        snapshot schema is the parent order with genuinely-new columns
+        appended, so time travel shows each snapshot exactly the columns
+        it had."""
         if parent_schema is None:
             return new_schema  # pre-evolution manifest (back-compat)
         ptypes = {c["name"]: c["type"] for c in parent_schema}
@@ -281,20 +296,19 @@ class Catalog:
 
     def frame(self, man, partitions=None):
         """load() over a manifest already read. With schema evolution
-        (round 4) the files of one snapshot may disagree on columns;
-        mergeSchema unifies them (absent columns read NULL) and the
-        manifest's recorded schema pins the column SET and ORDER each
-        snapshot exposes — an old snapshot never shows a column added
+        (round 4) the files of one snapshot may disagree on columns; the
+        read takes the manifest's recorded schema (absent columns read
+        NULL, no footer is inferred) and the result exposes exactly that
+        column SET and ORDER — an old snapshot never shows a column added
         later. No planned file gives an empty DataFrame of that
         schema."""
         files = self.plan_files(man, partitions)
         schema = man.get("schema")
         if not files and schema:
-            df = self.spark.createDataFrame([], ", ".join(
-                f"`{c['name']}` {c['type']}" for c in schema))
+            df = self.spark.createDataFrame([], _ddl(schema))
         else:
             df = self._df_for_files(man["table"], files,
-                                    man["partition_by"])
+                                    man["partition_by"], schema)
         if schema:
             from pyspark.sql import functions as F
             have = set(df.columns)
@@ -310,13 +324,23 @@ class Catalog:
             df = df.select(*cols)
         return df
 
-    def _df_for_files(self, table, files, partition_by):
+    def _df_for_files(self, table, files, partition_by, schema=None):
+        """DataFrame over `files`. With a manifest `schema` the read is
+        given it as DDL, so Spark reads no footer to plan it; a manifest
+        without one (written before schemas were recorded) falls back to
+        mergeSchema inference."""
         paths = [os.path.join(self.root, f["path"]) for f in files]
         if not paths:
             raise KeyError(f"snapshot of {table!r} is empty")
+
+        def read(base, base_paths):
+            r = self.spark.read.option("basePath", base)
+            r = r.schema(_ddl(schema)) if schema else \
+                r.option("mergeSchema", "true")
+            return r.parquet(*base_paths)
+
         if not partition_by:
-            return self.spark.read.option("basePath", self.root) \
-                .option("mergeSchema", "true").parquet(*paths)
+            return read(self.root, paths)
         # partitioned: read per data-dir base so hive partition columns
         # materialize (a single basePath=root read would either inject
         # no partition columns or, across several data dirs, trip
@@ -326,9 +350,7 @@ class Catalog:
                  for f in files}
         df = None
         for b in sorted(bases):
-            part = self.spark.read.option("basePath", b) \
-                .option("mergeSchema", "true").parquet(
-                    *[p for p in paths if p.startswith(b + os.sep)])
+            part = read(b, [p for p in paths if p.startswith(b + os.sep)])
             df = part if df is None else df.unionByName(
                 part, allowMissingColumns=True)
         return df
@@ -376,7 +398,8 @@ class Catalog:
                                              min_files)
         if not rewrite:
             return None
-        df = self._df_for_files(table, rewrite, man["partition_by"])
+        df = self._df_for_files(table, rewrite, man["partition_by"],
+                                man.get("schema"))
         n_out = max(1, -(-sum(f["bytes"] for f in rewrite)
                          // target_bytes))
         tdir = self._tdir(table)
@@ -398,43 +421,22 @@ class Catalog:
                 f"concurrent commit detected on {table!r}: compaction "
                 f"planned against snapshot {man['snapshot_id']} but HEAD "
                 f"is now {parent}; retry compact() against the new HEAD")
-        sid = parent + 1
-        manifest = {
-            "table": table,
-            "snapshot_id": sid,
-            "parent_snapshot_id": parent,
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ",
-                                          time.gmtime()),
-            "mode": "compact",
-            "partition_by": man["partition_by"],
-            "schema": man.get("schema"),
-            "files": keep + new_files,
-            "total_rows": sum(f["rows"] for f in keep + new_files),
-            "lineage": {"stage": "compact",
-                        "inputs": {table: parent},
-                        "rewritten_files": len(rewrite),
-                        "new_files": len(new_files)},
-            "metrics": {"commit_wall_clock_s": round(time.time() - t0,
-                                                     3)},
-        }
         # explicit raise (not assert) so the row-count invariant
         # survives `python -O` — a compaction that changes row count is
         # data loss and must never commit
-        if manifest["total_rows"] != man["total_rows"]:
+        files = keep + new_files
+        rows = sum(f["rows"] for f in files)
+        if rows != man["total_rows"]:
             raise RuntimeError(
                 f"compaction row-count mismatch on {table!r}: "
-                f"{man['total_rows']} before, "
-                f"{manifest['total_rows']} after — refusing to commit")
-        mpath = self._manifest_path(table, sid)
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh, indent=1)
-        os.replace(tmp, mpath)
-        htmp = self._head_path(table) + ".tmp"
-        with open(htmp, "w") as fh:
-            fh.write(str(sid))
-        os.replace(htmp, self._head_path(table))
-        return sid
+                f"{man['total_rows']} before, {rows} after — refusing "
+                "to commit")
+        return self._commit(
+            table, parent, "compact", man["partition_by"],
+            man.get("schema"), files,
+            {"stage": "compact", "inputs": {table: parent},
+             "rewritten_files": len(rewrite), "new_files": len(new_files)},
+            {"commit_wall_clock_s": round(time.time() - t0, 3)})
 
     def tables(self):
         return sorted(

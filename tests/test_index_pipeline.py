@@ -410,6 +410,41 @@ def test_point_routes_read_manifest_and_metadata_once(engine, pp_prune,
         assert calls == {"read_manifest": 1, "_read_meta": 1}
 
 
+def test_catalog_reads_plan_without_spark_jobs(spark, engine, pp_prune,
+                                                tmp_path):
+    """building a DataFrame from a manifest that records its schema runs
+    no Spark job: no footer is read to infer the schema, also when the
+    snapshot's files disagree on columns (an append added one)."""
+    from osc_geo_h3grid_srv_spark.sources.catalog import Catalog
+    cat = Catalog(str(tmp_path / "wh"), spark)
+    for name, part in (("flat", None), ("parted", ["p"])):
+        cat.write(name, spark.range(4).select(
+            F.col("id"), (F.col("id") % 2).cast("string").alias("p")),
+            partition_by=part)
+        cat.write(name, spark.range(4, 6).select(
+            F.col("id"), (F.col("id") % 2).cast("string").alias("p"),
+            (F.col("id") * 10).alias("w")), mode="append",
+            partition_by=part)
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog-plan-probe", "DataFrame building only")
+    try:
+        frames = [cat.load("flat"), cat.load("parted"),
+                  cat.load("parted", partitions={"p": {"1"}}),
+                  engine.radius("pp_prune", 52.52, 13.40, 20.0)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "catalog-plan-probe")) == []
+    # the schema-driven read still returns the evolved rows and types
+    assert frames[1].dtypes == [("id", "bigint"), ("p", "string"),
+                                ("w", "bigint")]
+    assert sorted(tuple(r) for r in frames[2].collect()) == [
+        (1, "1", None), (3, "1", None), (5, "1", 50)]
+    assert sorted(tuple(r) for r in frames[0].collect()) == [
+        (0, "0", None), (1, "1", None), (2, "0", None), (3, "1", None),
+        (4, "0", 40), (5, "1", 50)]
+
+
 @pytest.fixture(scope="module")
 def edge_pts(engine, spark):
     """points on both sides of the antimeridian, in a north polar cap and

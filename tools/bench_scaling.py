@@ -1,22 +1,24 @@
-"""Scaling-efficiency evidence for the north rule (BASELINE.json).
+"""N -> 4N scaling efficiency of the flagship (BASELINE.json north rule).
 
-The rule requires >=0.8 throughput scaling efficiency from N to 4N
-executors. No real cluster exists in this sandbox, so (per BASELINE.md
-"Sandbox realization") we run the IDENTICAL flagship job on IDENTICAL
-input at two parallelism levels -- local[8] and local[32] -- and report
-pages/sec at both plus efficiency = throughput(32) / (4 x throughput(8)).
+The rule asks for >=0.8 throughput scaling efficiency from N to 4N
+executors. Without a cluster, the IDENTICAL flagship job (bench.py) runs
+on IDENTICAL input at local[N] and local[4N], with N = host cores // 4
+(local[1] -> local[4] on a 4-core host); a host with fewer than 4 cores
+has no N -> 4N pair and the tool refuses to run.
 
-Each level runs in its own subprocess (fresh JVM, fresh executor pool) so
-nothing leaks between measurements. The pages parquet is materialized once
-and shared; python-worker warmup (process spawn + kernel imports) is
-untimed at both levels, mirroring long-lived executors on a real cluster.
+Each level runs in its own subprocess (fresh JVM, fresh Python worker
+pool) with the driver memory bench.py uses: one untimed warm-up on the
+real input, then bench.REPS timed reps. Per level it reports every rep
+and the median pages/sec; efficiency = median(4N) / (4 x median(N)).
+identical_output checks that every rep at every level produced the same
+(clipped points, interpolated cells) pair. The report is printed as one
+JSON line and written to BENCH-SCALING.json.
 
 Usage:
-    python tools/bench_scaling.py                 # full report (JSON line)
-    python tools/bench_scaling.py --cores 8       # one level (internal)
+    python tools/bench_scaling.py              # both levels + report
+    python tools/bench_scaling.py --cores 4    # one level (internal)
 
-Env: SPARK_GRAFT_PAGES (default 200000), SPARK_GRAFT_REPS (default 3,
-best-of to damp single-box jitter).
+Env: SPARK_GRAFT_PAGES (flagship pages, default 1000000).
 """
 
 from __future__ import annotations
@@ -24,344 +26,69 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import (HOST, REPS, _flagship_pipeline, prepare_pages,  # noqa: E402
+                   time_reps)
+
 N_PAGES = int(os.environ.get("SPARK_GRAFT_PAGES", "1000000"))
-REPS = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
 
 
-def _mem_small(_):
-    """small streaming-sum probe body (module-level: mp.Pool pickles by
-    reference); 64 MB x 4 passes per worker, fixed work per worker."""
-    import numpy as np
-    a = np.arange(8 * 1024 * 1024, dtype=np.float64)  # 64 MB
-    s = 0.0
-    for _ in range(4):
-        s += float(a.sum())
-    return s
+def ladder_levels(cores: int) -> tuple[int, int]:
+    """(N, 4N) for a host with `cores` cores; refuses below 4 cores."""
+    if cores < 4:
+        raise SystemExit(f"the N->4N ladder needs at least 4 cores; this "
+                         f"host has {cores}")
+    return cores // 4, 4 * (cores // 4)
 
 
-def serve_level(cores: int, n_pages: int) -> None:
-    """paired-mode child: build the session + warm up, then run ONE rep
-    per RUN line on stdin (print 'T <sec> <clipped> <interp>'), exit on
-    QUIT/EOF. Keeping the JVM alive lets the parent interleave reps
-    across levels so every round's 2/8/32 measurements share one
-    ~30-second host epoch — the only protocol that survives a box whose
-    capacity swings 6-7x WITHIN a six-rep ladder (see BASELINE.md
-    round-4 runs 3-4: best-of across distant visits lets the two levels'
-    bests come from DIFFERENT epochs, biasing efficiency either way)."""
-    from bench import _flagship_pipeline, prepare_pages
+def efficiency(pps_n, pps_4n) -> float:
+    """throughput scaling efficiency from the per-rep pages/sec of the
+    two levels: median(4N) / (4 x median(N))."""
+    return statistics.median(pps_4n) / (4.0 * statistics.median(pps_n))
+
+
+def identical_output(levels) -> bool:
+    """True when every rep of every level gave the same (clipped,
+    interp) pair."""
+    return len({tuple(o) for lv in levels for o in lv["outputs"]}) == 1
+
+
+def run_level(cores: int, n_pages: int) -> dict:
+    """the flagship at local[cores]: warm-up, then REPS timed reps."""
     from osc_geo_h3grid_srv_spark.engine import make_spark
 
     spark = make_spark(cores=cores,
                        shuffle_partitions=max(cores * 2, 16),
                        extra_conf={"spark.ui.enabled": "false",
-                                   "spark.driver.memory": "24g"})
+                                   "spark.driver.memory":
+                                       f"{HOST.driver_memory_mb}m"})
     pages_path = prepare_pages(spark, n_pages)
-    _flagship_pipeline(spark, pages_path)  # warmup, untimed
-    print("READY", flush=True)
-    for line in sys.stdin:
-        if line.strip() != "RUN":
-            break
-        t0 = time.time()
-        clipped, interp = _flagship_pipeline(spark, pages_path)
-        print(f"T {round(time.time() - t0, 3)} {clipped} {interp}",
-              flush=True)
-    spark.stop()
-
-
-def run_paired(n_pages: int, rounds: int,
-               reps_per_round: int = 1) -> dict:
-    """paired protocol: three live level servers, reps interleaved
-    (2, 8, 32) x rounds; per-round efficiencies + the best round.
-
-    reps_per_round=2 visits each level twice per round in palindrome
-    order (2,8,32,32,8,2) and keeps the per-level min: a single-rep
-    round makes the round's efficiency hostage to one mid-rep host
-    stall; the palindrome pair damps that while the whole round still
-    fits one ~60-second epoch (disclosed in the metric string)."""
-    cores_list = (2, 8, 32)
-
-    def _await(p, tag):
-        for line in p.stdout:
-            if line.startswith(tag):
-                return line.strip()
-        raise SystemExit(f"paired child died before {tag!r}")
-
-    # children launch SEQUENTIALLY (spawn -> READY -> next): the first
-    # child materializes the shared pages parquet; overlapping launches
-    # could race two writers onto the same path. Warmups are untimed.
-    procs = {}
-    for cores in cores_list:
-        procs[cores] = subprocess.Popen(
-            [sys.executable, os.path.abspath(__file__), "--serve",
-             "--cores", str(cores)],
-            stdin=subprocess.PIPE, stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL, text=True, cwd=REPO,
-            env=os.environ)
-        _await(procs[cores], "READY")
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from host_probe import _cpu_work, _pool_time
-    per_round = []
-    reps = {c: [] for c in cores_list}
-    counts = {}
-    visit_order = list(cores_list)
-    if reps_per_round >= 2:
-        visit_order = visit_order + list(reversed(visit_order))
-    for _ in range(rounds):
-        rnd_reps = {c: [] for c in cores_list}
-        for cores in visit_order:
-            p = procs[cores]
-            p.stdin.write("RUN\n")
-            p.stdin.flush()
-            _, sec, clip, interp = _await(p, "T ").split()
-            rnd_reps[cores].append(float(sec))
-            reps[cores].append(float(sec))
-            counts[cores] = (int(clip), int(interp))
-        rnd = {c: min(v) for c, v in rnd_reps.items()}
-        # co-epoch HOST capacity labels: fixed per-worker work, so
-        # perfect scaling = identical wall time at 8 and 32 workers.
-        # ALU = a pure-Python busy-loop (core count); MEM = a small
-        # NumPy streaming sum (memory bandwidth — the resource an
-        # Arrow/NumPy pipeline actually leans on; this box can be
-        # ALU-clean and bandwidth-starved in the same epoch). A round
-        # where the probes themselves cannot scale is a round where
-        # the box withdrew capacity — it disqualifies the EPOCH, and
-        # says nothing about the engine's plan.
-        alu2 = _pool_time(_cpu_work, 2)
-        alu8 = _pool_time(_cpu_work, 8)
-        alu32 = _pool_time(_cpu_work, 32)
-        mem2 = _pool_time(_mem_small, 2)
-        mem8 = _pool_time(_mem_small, 8)
-        mem32 = _pool_time(_mem_small, 32)
-        per_round.append({
-            "sec": rnd,
-            "eff_2_to_8": round(rnd[2] / (4.0 * rnd[8]), 3),
-            "eff_8_to_32": round(rnd[8] / (4.0 * rnd[32]), 3),
-            "host_alu_eff_8_to_32": round(alu8 / alu32, 3),
-            "host_mem_eff_8_to_32": round(mem8 / mem32, 3),
-            # the north rule's N->4N instantiation is 2->8, so label
-            # each round with 2-vs-8 probe cleanliness too: a box can
-            # be bandwidth-starved at 32 streaming workers (which only
-            # pollutes the 8->32 number) while the 2->8 measurement's
-            # resource envelope is clean. Disclosed separately; the
-            # 8->32 gate and fields are unchanged.
-            "host_alu_eff_2_to_8": round(alu2 / alu8, 3),
-            "host_mem_eff_2_to_8": round(mem2 / mem8, 3),
-        })
-    for p in procs.values():
-        try:
-            p.stdin.write("QUIT\n")
-            p.stdin.flush()
-        except BrokenPipeError:
-            pass
-        p.wait(timeout=60)
-    # clean epoch = cores present (ALU ~flat 8->32) AND memory bandwidth
-    # near this box's healthy ceiling (~0.7 streaming efficiency 8->32
-    # per BASELINE.md probes; degraded epochs measure 0.31-0.48).
-    # An efficiency > 1.05 is physically meaningless for a fixed job
-    # (only mid-round capacity churn produces it — e.g. the slow level
-    # caught a stall the fast level missed) and invalidates the round
-    # outright rather than "winning".
-    valid = [r for r in per_round if r["eff_2_to_8"] <= 1.05]
-    clean = [r for r in valid if r["host_alu_eff_8_to_32"] >= 0.85
-             and r["host_mem_eff_8_to_32"] >= 0.6]
-    # 2->8-clean rounds gate ONLY the 2->8 (N->4N) claim: the probes
-    # match the resource envelope actually measured (2 vs 8 workers).
-    clean28 = [r for r in valid
-               if r.get("host_alu_eff_2_to_8", 0) >= 0.85
-               and r.get("host_mem_eff_2_to_8", 0) >= 0.6]
-    best = max(clean or valid or per_round,
-               key=lambda r: r["eff_2_to_8"])
-    best28 = max(clean28, key=lambda r: r["eff_2_to_8"]) \
-        if clean28 else None
-    report = {
-        "metric": "flagship pages/sec, PAIRED ladder (per-round "
-                  "co-epoch 2/8/32 reps from three live JVMs; each "
-                  "round labeled with a same-epoch pure-ALU host "
-                  "capacity probe)"
-                  + ("; best-of-%d palindrome visits per level within "
-                     "each round" % reps_per_round
-                     if reps_per_round >= 2 else ""),
-        "n_pages": n_pages,
-        "rounds": per_round,
-        "rep_secs": {f"local{c}": reps[c] for c in cores_list},
-        "clean_epoch_rounds": len(clean),
-        "host_degraded_all_rounds": not clean,
-        "best_round": best,
-        "scaling_efficiency_2_to_8": best["eff_2_to_8"],
-        "scaling_efficiency_8_to_32": best["eff_8_to_32"],
-        "pages_per_sec_local32": round(
-            n_pages / min(reps[32]), 1),
-        # None = indeterminate: no probe-clean round exists, so this
-        # ladder can neither evidence nor refute the rule
-        "meets_north_rule_0.8": (best["eff_2_to_8"] >= 0.8 if clean
-                                 else None),
-        # the 2->8-gated view of the same rounds (None = no round was
-        # 2->8 probe-clean either)
-        "clean_epoch_rounds_2_8": len(clean28),
-        "best_round_2_8": best28,
-        "scaling_efficiency_2_to_8_gated_2_8": (
-            best28["eff_2_to_8"] if best28 else None),
-        "meets_north_rule_0.8_from_2_8": (
-            best28["eff_2_to_8"] >= 0.8 if clean28 else None),
-        "identical_output": len(set(counts.values())) == 1,
-    }
-    print(json.dumps(report))
-    _write_paired_accumulating(report)
-    return report
-
-
-def _write_paired_accumulating(report: dict) -> None:
-    """append this run as an ATTEMPT instead of overwriting: a degraded
-    epoch's null verdict must be disclosed, not allowed to bury an
-    earlier probe-clean run (each attempt's clean rounds share one epoch
-    by construction, so the summary comes from the single attempt with
-    the most clean rounds — never merged across epochs)."""
-    report = dict(report)
-    report.setdefault("ts", time.strftime("%Y-%m-%dT%H:%M:%S"))
-    path = os.path.join(REPO, "BENCH-SCALING-PAIRED.json")
-    attempts = []
-    if os.path.exists(path):
-        try:
-            with open(path) as f:
-                prev = json.load(f)
-            if "attempts" in prev:
-                attempts = prev["attempts"]
-            elif "rounds" in prev:  # pre-accumulation single-run format
-                attempts = [prev]
-        except (json.JSONDecodeError, OSError):
-            attempts = []
-    attempts.append(report)
-    best = max(attempts, key=lambda a: (
-        a.get("clean_epoch_rounds", 0),
-        a.get("scaling_efficiency_2_to_8") or 0))
-    out = {
-        "metric": report["metric"] + " — accumulated attempts; summary "
-                  "from the attempt with the most probe-clean rounds",
-        "n_attempts": len(attempts),
-        "best_attempt_ts": best.get("ts"),
-        "clean_epoch_rounds": best.get("clean_epoch_rounds", 0),
-        "scaling_efficiency_2_to_8": best.get(
-            "scaling_efficiency_2_to_8"),
-        "scaling_efficiency_8_to_32": best.get(
-            "scaling_efficiency_8_to_32"),
-        "pages_per_sec_local32": best.get("pages_per_sec_local32"),
-        "meets_north_rule_0.8": best.get("meets_north_rule_0.8"),
-        "identical_output": all(a.get("identical_output")
-                                for a in attempts),
-        "attempts": attempts,
-    }
-    # the 2->8-gated view across attempts (only attempts recorded by
-    # tool versions that took 2-vs-8 probes participate), STRATIFIED by
-    # measurement scale: attempts at different n_pages are not one
-    # population — the flagship's fixed serial floor S ≈ 2 s (Amdahl
-    # fit, BASELINE.md "Reading the numbers") bounds whole-job 2->8
-    # efficiency to ~(S+P/2)/(4(S+P/8)) regardless of the plan, so at
-    # 1M pages (P ≈ 31 core-s) even a perfectly-scaling plan measures
-    # ~0.78 while at 4M+ the same plan clears 0.8. Mixing scales lets
-    # a floor-bound small-scale attempt outvote a representative one.
-    # Every scale's verdict is reported; the headline gated verdict
-    # comes from the LARGEST scale with >=1 probe-clean round (closest
-    # to the rule's production regime, where S/P -> 0).
-    by_scale = {}
-    for a in attempts:
-        if not a.get("clean_epoch_rounds_2_8"):
-            continue
-        sc = a.get("n_pages")
-        cur = by_scale.get(sc)
-        key = (a.get("clean_epoch_rounds_2_8", 0),
-               a.get("scaling_efficiency_2_to_8_gated_2_8") or 0)
-        if cur is None or key > (cur["clean_epoch_rounds_2_8"],
-                                 cur["scaling_efficiency_2_to_8_gated_2_8"]):
-            by_scale[sc] = {
-                "ts": a.get("ts"),
-                "clean_epoch_rounds_2_8": a["clean_epoch_rounds_2_8"],
-                "scaling_efficiency_2_to_8_gated_2_8": a.get(
-                    "scaling_efficiency_2_to_8_gated_2_8"),
-                "meets_north_rule_0.8_from_2_8": a.get(
-                    "meets_north_rule_0.8_from_2_8"),
-            }
-    if by_scale:
-        out["gated_2_8_by_scale"] = {str(k): v
-                                     for k, v in sorted(by_scale.items())}
-        out["gated_2_8_scale_note"] = (
-            "whole-job 2->8 efficiency is floor-bounded by the fixed "
-            "~2s serial driver latency (Amdahl fit, BASELINE.md): at "
-            "1M pages the bound is ~0.78 for a perfectly-scaling plan, "
-            "so sub-0.8 readings there measure the floor, not the "
-            "plan; the headline comes from the largest scale with a "
-            "probe-clean round")
-        head_scale = max(by_scale)
-        head = by_scale[head_scale]
-        out["gated_2_8_headline_n_pages"] = head_scale
-        out["clean_epoch_rounds_2_8"] = head["clean_epoch_rounds_2_8"]
-        out["best_attempt_ts_2_8"] = head.get("ts")
-        out["scaling_efficiency_2_to_8_gated_2_8"] = head.get(
-            "scaling_efficiency_2_to_8_gated_2_8")
-        out["meets_north_rule_0.8_from_2_8"] = head.get(
-            "meets_north_rule_0.8_from_2_8")
-    with open(path, "w") as f:
-        f.write(json.dumps(out) + "\n")
-
-
-def run_level(cores: int, n_pages: int, reps: int) -> dict:
-    """run the flagship pipeline at local[cores]; return best-of timings."""
-    from bench import _flagship_pipeline, prepare_pages
-    from osc_geo_h3grid_srv_spark.engine import make_spark
-
-    spark = make_spark(cores=cores,
-                       shuffle_partitions=max(cores * 2, 16),
-                       extra_conf={"spark.ui.enabled": "false",
-                                   "spark.driver.memory": "24g"})
-    pages_path = prepare_pages(spark, n_pages)
-    # warmup on the REAL input, untimed: spawns+imports the python worker
+    # warm-up on the REAL input, untimed: spawns+imports the python worker
     # pool, JIT-compiles the exact generated code for this plan, and warms
     # the OS page cache -- all states a long-lived cluster executor holds
     _flagship_pipeline(spark, pages_path)
-    times = []
-    counts = None
-    for _ in range(reps):
-        t0 = time.time()
-        counts = _flagship_pipeline(spark, pages_path)
-        times.append(round(time.time() - t0, 3))
+    secs, outs = time_reps(lambda: _flagship_pipeline(spark, pages_path))
     spark.stop()
-    best = min(times)
-    return {"cores": cores, "sec": best, "rep_secs": times,
-            "pages_per_sec": round(n_pages / best, 1),
-            "clipped": counts[0], "interp_cells": counts[1]}
+    return {"cores": cores, "rep_secs": secs, "outputs": outs}
 
 
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument("--serve", action="store_true")
-    ap.add_argument("--paired", action="store_true")
-    ap.add_argument("--rounds", type=int, default=4)
-    ap.add_argument("--reps-per-round", type=int, default=1)
     args = ap.parse_args()
 
-    if args.serve:  # paired-mode child: live server, one rep per RUN
-        serve_level(args.cores, N_PAGES)
-        return
-    if args.paired:
-        run_paired(N_PAGES, args.rounds, args.reps_per_round)
-        return
     if args.cores:  # child: one level, print one JSON line
-        print("RESULT " + json.dumps(run_level(args.cores, N_PAGES, REPS)))
+        print("RESULT " + json.dumps(run_level(args.cores, N_PAGES)))
         return
 
-    # palindrome visit order: the sandbox host's CPU capacity varies over
-    # time (burstable VM), so each level gets two separate JVM visits at
-    # different times; best-of across both dodges slow host epochs and the
-    # symmetric order cancels monotone drift between levels.
-    levels = {}
-    for cores in (2, 8, 32, 32, 8, 2):
+    levels = []
+    for cores in ladder_levels(HOST.cores):
         out = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--cores",
              str(cores)],
@@ -371,63 +98,25 @@ def main():
         if not line:
             sys.stderr.write(out.stdout + out.stderr)
             raise SystemExit(f"level local[{cores}] failed")
-        res = json.loads(line[-1][len("RESULT "):])
-        prev = levels.get(cores)
-        if prev is not None:
-            res["rep_secs"] = prev["rep_secs"] + res["rep_secs"]
-            if prev["sec"] < res["sec"]:
-                res.update({k: prev[k] for k in
-                            ("sec", "pages_per_sec")})
-        levels[cores] = res
+        lv = json.loads(line[-1][len("RESULT "):])
+        lv["pages_per_sec"] = [round(N_PAGES / s, 1) for s in lv["rep_secs"]]
+        lv["median_pages_per_sec"] = statistics.median(lv["pages_per_sec"])
+        levels.append(lv)
 
-    # two N -> 4N pairs on the same box. 2 -> 8 isolates the engine's
-    # scaling (no memory-bus contention); 8 -> 32 additionally saturates
-    # the single box's memory bandwidth, which on a real cluster would be
-    # 4x'd along with the executors.
-    t2, t8, t32 = (levels[c]["pages_per_sec"] for c in (2, 8, 32))
-    eff_2_8 = round(t8 / (4.0 * t2), 3)
-    eff_8_32 = round(t32 / (4.0 * t8), 3)
-
-    # Amdahl decomposition from the 3 levels: T(c) = S + P/c fitted on
-    # (2, 8); then P32 = 32*(T(32)-S) measures how much extra parallel
-    # work 32-way concurrency costs (memory-bandwidth inflation on one
-    # box). parallel_eff_* is the efficiency of the PARALLEL component
-    # alone — the part that 4x's with executors on a real cluster, where
-    # the serial floor (driver/stage latency, fixed per job) does not
-    # grow with data and the parallel part is hours, not seconds.
-    s2, s8, s32 = (levels[c]["sec"] for c in (2, 8, 32))
-    P = (s2 - s8) / (1 / 2 - 1 / 8)
-    amdahl = {}
-    if P > 0:
-        S = max(s2 - P / 2, 0.0)
-        p32 = 32 * max(s32 - S, 1e-9)
-        amdahl = {
-            "serial_s": round(S, 2),
-            "parallel_core_s_fit_2_8": round(P, 2),
-            "parallel_core_s_at_32": round(p32, 2),
-            "t32_predicted_if_parallel_perfect": round(S + P / 32, 2),
-            "t32_measured": s32,
-            "parallel_eff_8_to_32": round(min(P / p32, 1.0), 3),
-            "note": "T(c)=S+P/c fit on local[2]/local[8] bests (exact on "
-                    "those 2 points); the 32-level is the out-of-sample "
-                    "check. See BASELINE.md for why the serial floor "
-                    "vanishes at production scale.",
-        }
+    n, n4 = levels
+    eff = round(efficiency(n["pages_per_sec"], n4["pages_per_sec"]), 3)
     report = {
-        "metric": "flagship H3-indexed pages/sec at local[2]/[8]/[32]",
+        "metric": f"flagship pages/sec at local[{n['cores']}] and "
+                  f"local[{n4['cores']}]: median of {REPS} reps after one "
+                  f"untimed warm-up, one JVM per level",
         "n_pages": N_PAGES,
-        "reps_best_of": REPS,
-        "local2": levels[2],
-        "local8": levels[8],
-        "local32": levels[32],
-        "scaling_efficiency_2_to_8": eff_2_8,
-        "scaling_efficiency_8_to_32": eff_8_32,
-        "amdahl": amdahl,
-        "meets_north_rule_0.8": eff_2_8 >= 0.8,
-        "identical_output": all(
-            levels[c]["clipped"] == levels[2]["clipped"]
-            and levels[c]["interp_cells"] == levels[2]["interp_cells"]
-            for c in (8, 32)),
+        "host_cores": HOST.cores,
+        "driver_memory_mb": HOST.driver_memory_mb,
+        "reps": REPS,
+        "levels": {f"local{lv['cores']}": lv for lv in levels},
+        "scaling_efficiency": eff,
+        "meets_north_rule_0.8": eff >= 0.8,
+        "identical_output": identical_output(levels),
     }
     print(json.dumps(report))
     with open(os.path.join(REPO, "BENCH-SCALING.json"), "w") as f:
