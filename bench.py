@@ -55,6 +55,17 @@ def time_reps(fn):
     return secs, outs
 
 
+def session(cores):
+    """the one bench session shape: local[cores], max(2 x cores, 32)
+    shuffle partitions, the host's driver memory. bench.py and every
+    level of the N -> 4N ladder (tools/bench_scaling.py) run in it."""
+    from osc_geo_h3grid_srv_spark.engine import make_spark
+    return make_spark(cores=cores, shuffle_partitions=max(cores * 2, 32),
+                      extra_conf={"spark.ui.enabled": "false",
+                                  "spark.driver.memory":
+                                      f"{HOST.driver_memory_mb}m"})
+
+
 def prepare_pages(spark, n_pages):
     """materialize the deterministic pages table once (data prep, not part
     of the measured pipeline - production reads pages from the lake)."""
@@ -120,11 +131,7 @@ def _flagship_pipeline(spark, pages_path):
 
 def main():
     t_start = time.time()
-    from osc_geo_h3grid_srv_spark.engine import make_spark
-    spark = make_spark(cores=CPUS, shuffle_partitions=max(CPUS * 2, 32),
-                       extra_conf={"spark.ui.enabled": "false",
-                                   "spark.driver.memory":
-                                       f"{HOST.driver_memory_mb}m"})
+    spark = session(CPUS)
     import __spark_entry__ as em
 
     timings = {}

@@ -1,7 +1,8 @@
-"""The bench protocol without Spark: bench.py's fixed rep loop and host
-sizing, and tools/bench_scaling.py's host-sized N -> 4N ladder (levels,
-efficiency from medians, output identity over every rep). Importing both
-modules here also catches an import of a module that no longer exists.
+"""The bench protocol without Spark: bench.py's fixed rep loop, host
+sizing and session shape, and tools/bench_scaling.py's host-sized N -> 4N
+ladder (levels, efficiency from medians, output identity over every
+rep). Importing both modules here also catches an import of a module
+that no longer exists.
 """
 
 import importlib.util
@@ -34,6 +35,30 @@ def test_time_reps_runs_fixed_reps():
     assert bench.REPS == 3
     assert len(calls) == len(secs) == bench.REPS
     assert outs == [1, 2, 3]
+
+
+def test_bench_and_ladder_share_one_session_shape(scaling, monkeypatch):
+    from osc_geo_h3grid_srv_spark import engine
+
+    class Built(Exception):
+        pass
+
+    shapes = []
+
+    def make_spark(**kw):
+        shapes.append(kw)
+        raise Built  # stop before any JVM or data
+
+    monkeypatch.setattr(engine, "make_spark", make_spark)
+    monkeypatch.setattr(bench, "CPUS", 4)
+    for start in (bench.main, lambda: scaling.run_level(4, 10)):
+        with pytest.raises(Built):
+            start()
+    assert len(shapes) == 2 and shapes[0] == shapes[1]
+    assert shapes[0]["cores"] == 4
+    assert shapes[0]["shuffle_partitions"] == 32
+    assert shapes[0]["extra_conf"]["spark.driver.memory"] == \
+        f"{bench.HOST.driver_memory_mb}m"
 
 
 @pytest.mark.parametrize("cores,levels", [(4, (1, 4)), (5, (1, 4)),

@@ -154,16 +154,3 @@ def test_time_filter_inference_errors(engine, spark):
     assert engine.radius("monthly_ds", 51.0, 10.0, -1, resolution=7,
                          year=2021, month=12).count() == 0
 
-
-def test_parent_cross_impl_gates_zero_mismatch(spark):
-    """round-3 (VERDICT next-step #8): the two formerly rows-only
-    entries carry in-query cross-implementation assertions — numpy
-    cell_to_parent vs the JVM bit-math replay must agree row-for-row,
-    surfacing as an all-zero n_parent_impl_mismatch column."""
-    import __spark_entry__ as em
-    import pyspark.sql.functions as F
-    for q in ("h3_index_documents", "pages_index_pipeline"):
-        df = em.queries()[q](spark, "/root/testdata/sf0.01")
-        assert "n_parent_impl_mismatch" in df.columns
-        bad = df.agg(F.sum("n_parent_impl_mismatch")).collect()[0][0]
-        assert bad == 0, f"{q}: {bad} parent-impl mismatches"

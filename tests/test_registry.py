@@ -1,30 +1,58 @@
-"""Physical-plan audit: .explain('formatted') for the headline operators,
-with automatic checks that the plans have the shape a 100 TB run needs —
-pushed filters reaching the parquet scan, pruned read schemas, broadcast
-joins for small dims, whole-stage codegen spans, no Python in JVM-only
-pipelines. Writes PLANS.md.
+"""The driver-facing registry of `__spark_entry__` in tier-1.
 
-Usage: python tools/explain_audit.py [sf_dir]
+Every `queries()` entry is built once at sf0.01 on the shared session and
+executed once (`toPandas()`); that one execution is checked two ways:
+
+- **oracle**: when `oracle_sql()` has the entry, DuckDB runs it over the
+  same parquet tables, and the sorted column names, the row count and an
+  order-insensitive value hash must match;
+- **plan**: the formatted physical plan of the executed DataFrame (so
+  AQE's final plan) holds no `CartesianProduct` and no row-at-a-time
+  `BatchEvalPython`, and matches the entry's `PLAN_SPECS` expect/forbid
+  patterns where it has a spec.
+
+Plus the `entry()` smoke, the plan of one non-registry operator and
+static checks of the entry module (no duplicate top-level def, oracle
+coverage, every spec names an entry). One entry alone:
+
+    pytest tests/test_registry.py -k <entry>
 """
 
 from __future__ import annotations
 
+import ast
+import collections
+import contextlib
+import hashlib
 import io
 import os
 import re
-import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+import duckdb
+import pytest
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-# optional 2nd arg: comma-separated audit names — check just those
-# (PLANS.md is NOT rewritten in filtered mode, so a spot-check never
-# truncates the full book)
-ONLY = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
+import __spark_entry__ as em
 
-# query name -> properties we assert about its physical plan
-AUDITS = {
+SF_DIR = "/root/testdata/sf0.01"
+TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings"]
+
+QUERIES = em.queries()
+ORACLES = em.oracle_sql()
+#: kernel-only entries without an oracle_sql(): checked for rows, no hash
+ROWS_ONLY = {"kring_cells", "polyfill_region_cells", "cell_overlap_region",
+             "h3_index_documents", "pages_index_pipeline",
+             "h3_hotspot_cells"}
+#: entries that replay cell_to_parent in the JVM next to the numpy kernel
+#: and sum the disagreements into n_parent_impl_mismatch
+PARENT_IMPL_GATED = ("h3_index_documents", "pages_index_pipeline")
+#: operators no registry plan may hold. BroadcastNestedLoopJoin is not
+#: among them: it is the one-row scalar-broadcast idiom in many entries,
+#: and a spec forbids it where it would be a real nested loop.
+BANNED = ("CartesianProduct", "BatchEvalPython")
+
+# entry name -> what its executed physical plan must / must not match
+PLAN_SPECS = {
     "radius_reference": {
         "expect": ["PushedFilters", "codegen id"],
         "forbid": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"],
@@ -108,11 +136,11 @@ AUDITS = {
         "note": "MinHash LSH dedup: band-bucket equi-join candidates, "
                 "never an all-pairs product; the pair-dedup exchange "
                 "carries (id_a, id_b, est_jaccard) — the full signatures "
-                "never ride the distinct shuffle (round-2 narrowing)",
+                "never ride the distinct shuffle",
     },
     "simhash_pairs": {
         # gl/gr in the join keys = the salted triangle decomposition is
-        # actually in the plan (bounded in-bucket task size, round-3)
+        # actually in the plan (bounded in-bucket task size)
         "expect": ["HashAggregate",
                    r"(?i)keys \[4\]: \[band[^\]]*gl[^\]]*gr"],
         "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin",
@@ -680,7 +708,7 @@ AUDITS = {
         "forbid": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas",
                    "CartesianProduct", "SortMergeJoin",
                    "BroadcastNestedLoopJoin"],
-        "note": "RFC 9309 SS2.2.3 wildcard rules (round 4): the "
+        "note": "RFC 9309 SS2.2.3 wildcard rules: the "
                 "anchored-regex compilation happens on the broadcast "
                 "rule side; the url side still sees one broadcast join "
                 "+ one max_by aggregate, regex or not — no Python, no "
@@ -690,8 +718,8 @@ AUDITS = {
         "expect": ["Generate", "HashAggregate"],
         "forbid": ["ArrowEvalPython", "BatchEvalPython", "MapInPandas",
                    "CartesianProduct", "BroadcastNestedLoopJoin"],
-        "note": "SRP-LSH blocked embedding dedup (round 4, VERDICT r3 "
-                "Next #6): bucket ids explode per table (Generate), "
+        "note": "SRP-LSH blocked embedding dedup: bucket ids explode per "
+                "table (Generate), "
                 "candidates come from a bucket EQUI-join — the plan "
                 "must never contain a cross/nested-loop join; the "
                 "exact cosine re-rank is JVM fold arithmetic",
@@ -720,7 +748,7 @@ AUDITS = {
         "expect": ["MapInPandas", "bit_count"],
         "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin",
                    "SortMergeJoin"],
-        "note": "perceptual image dedup (round 4): the ONLY Python is "
+        "note": "perceptual image dedup: the ONLY Python is "
                 "the per-row-by-nature media decode (MapInPandas); "
                 "candidates come from the salted banded equi-join "
                 "inherited from simhash (hamming_pairs) — never a "
@@ -730,17 +758,16 @@ AUDITS = {
         "expect": ["MapInPandas", "bit_count"],
         "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin",
                    "SortMergeJoin"],
-        "note": "acoustic dedup (round 4): same shape as "
+        "note": "acoustic dedup: same shape as "
                 "image_dhash_pairs — decode-only Python, banded "
                 "equi-join candidates, JVM hamming verify",
     },
     "quality_top_fraction_approx": {
-        "build": "_build_top_fraction_approx",
         "expect": ["ObjectHashAggregate", "BroadcastHashJoin"],
         "forbid": ["Window", "rangepartitioning", "Sort \\[",
                    "ArrowEvalPython", "BatchEvalPython",
                    "CartesianProduct", "SortMergeJoin"],
-        "note": "approx top-fraction (round 4, VERDICT r3 Next #7): "
+        "note": "approx top-fraction: "
                 "percentile_approx is a mergeable GK sketch -> "
                 "partial+final ObjectHashAggregate over the group-"
                 "keyed exchange; thresholds broadcast back; NO Window, "
@@ -1097,69 +1124,137 @@ AUDITS = {
 }
 
 
-def _build_top_fraction_approx(spark, sf_dir):
+def value_hash(pdf):
+    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
+    rows = sorted(
+        "|".join(_norm(v) for v in row) for row in pdf.values.tolist())
+    h = hashlib.sha256()
+    for r in rows:
+        h.update(r.encode())
+        h.update(b"\n")
+    return h.hexdigest()[:16]
+
+
+def _norm(v):
+    # dtype-sensitive: a float64 25.0 must NOT hash equal to an int64 25
+    # (DuckDB's sum(INTEGER) -> HUGEINT materializes as float64 in
+    # pandas, which a looser normalizer would paper over)
+    import numpy as np
+    if v is None:
+        return "NULL"
+    if isinstance(v, (np.integer,)):
+        return str(int(v))
+    if isinstance(v, (np.floating,)):
+        v = float(v)
+    if isinstance(v, float):
+        if v != v:
+            return "NULL"
+        s = f"{v:.6g}"
+        if "." not in s and "e" not in s and "n" not in s:
+            s += ".0"  # keep the float-ness visible
+        return s
+    return str(v)
+
+
+@pytest.fixture(scope="module")
+def oracle():
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"create view {t} as select * from "
+                f"read_parquet('{SF_DIR}/{t}.parquet')")
+    yield con
+    con.close()
+
+
+def _oracle_problems(name, got, con):
+    want = con.sql(ORACLES[name]).df()
+    gcols, wcols = sorted(got.columns), sorted(want.columns)
+    if gcols != wcols:
+        return [f"columns {gcols} vs oracle {wcols}"]
+    if len(got) != len(want):
+        return [f"rows {len(got)} vs oracle {len(want)}"]
+    gh, wh = value_hash(got), value_hash(want)
+    if gh == wh:
+        return []
+    gs = set(map(tuple, got[gcols].astype(str).values.tolist()))
+    ws = set(map(tuple, want[wcols].astype(str).values.tolist()))
+    return [f"value hash {gh} vs oracle {wh} ({len(got)} rows); "
+            f"only-spark {sorted(gs - ws)[:2]}, "
+            f"only-oracle {sorted(ws - gs)[:2]}"]
+
+
+def _plan_problems(name, df):
+    """the expect/forbid misses of df's formatted plan; call after df
+    ran, so the adaptive plan is final (codegen ids appear only then)"""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    spec = PLAN_SPECS.get(name, {"expect": [], "forbid": [], "note": ""})
+    bad = [f"expect:{p}" for p in spec["expect"] if not re.search(p, plan)]
+    bad += [f"forbid:{p}" for p in dict.fromkeys(BANNED + tuple(
+        spec["forbid"])) if re.search(p, plan)]
+    if not bad:
+        return []
+    return [f"plan {', '.join(bad)} -- {spec['note']}\n{plan}"]
+
+
+@pytest.mark.parametrize("name", list(QUERIES))
+def test_query(spark, oracle, name):
+    df = QUERIES[name](spark, SF_DIR)
+    got = df.toPandas()
+    problems = []
+    if name in ORACLES:
+        problems += _oracle_problems(name, got, oracle)
+    elif got.empty:
+        problems.append("rows-only entry returned no rows")
+    if name in PARENT_IMPL_GATED:
+        if "n_parent_impl_mismatch" not in got.columns:
+            problems.append("no n_parent_impl_mismatch column")
+        elif (bad := got["n_parent_impl_mismatch"].sum()) != 0:
+            problems.append(f"{bad} parent-impl mismatches")
+    problems += _plan_problems(name, df)
+    assert not problems, f"{name}: " + "\n".join(problems)
+
+
+def test_top_fraction_approx_plan(spark):
+    """an operator outside the registry, planned on its own"""
     from pyspark.sql import functions as F
     from osc_geo_h3grid_srv_spark.operators.quality import (
         quality_classifier, top_fraction_by_group_approx)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     # group key derived in the same projection so the ONLY join in the
     # plan is the broadcast of the per-group thresholds
     scored = quality_classifier(docs).withColumn(
         "g", F.col("doc_id") % 7)
-    return top_fraction_by_group_approx(scored, 0.3, "g",
-                                        "quality_score")
+    df = top_fraction_by_group_approx(scored, 0.3, "g", "quality_score")
+    df.toPandas()
+    problems = _plan_problems("quality_top_fraction_approx", df)
+    assert not problems, "\n".join(problems)
 
 
-def main():
-    from osc_geo_h3grid_srv_spark.engine import make_spark
-    import __spark_entry__ as em
-
-    spark = make_spark(cores=8, shuffle_partitions=16,
-                       extra_conf={"spark.ui.enabled": "false"})
-    qs = em.queries()
-    out = io.StringIO()
-    out.write(
-        "# Physical plan audit\n\n"
-        "Generated by `tools/explain_audit.py` at sf_dir=%s.\n"
-        "Each section: the properties asserted about the plan (what keeps"
-        " it viable at 100 TB), then the formatted physical plan.\n"
-        % SF_DIR)
-    failures = []
-    for name, spec in AUDITS.items():
-        if ONLY is not None and name not in ONLY:
-            continue
-        if "build" in spec:  # non-entry operators audited directly
-            df = globals()[spec["build"]](spark, SF_DIR)
-        else:
-            df = qs[name](spark, SF_DIR)
-        df.collect()  # materialize THIS plan (AQE codegen ids appear
-        #               only once the adaptive stages finalize; count()
-        #               would wrap a different plan)
-        import contextlib
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        oks, bads = [], []
-        for pat in spec["expect"]:
-            (oks if re.search(pat, plan) else bads).append("expect:" + pat)
-        for pat in spec["forbid"]:
-            (bads if re.search(pat, plan) else oks).append("forbid:" + pat)
-        status = "OK" if not bads else "FAIL(" + ",".join(bads) + ")"
-        if bads:
-            failures.append((name, bads))
-        print(f"{status:8s} {name}: {', '.join(oks)}")
-        out.write(f"\n## {name} — {status}\n\n{spec['note']}\n\n"
-                  f"checks: {', '.join(spec['expect'] + ['no ' + f for f in spec['forbid']])}\n\n"
-                  "```\n" + plan.strip()[:6000] + "\n```\n")
-    if ONLY is None:
-        with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
-            fh.write(out.getvalue())
-    spark.stop()
-    if failures:
-        raise SystemExit(f"plan audit failures: {failures}")
-    print("PLANS.md written" if ONLY is None else "spot-check OK")
+def test_entry_smoke(spark):
+    df = em.entry(spark)
+    assert df.columns == ["url", "latitude", "longitude", "res7", "res9",
+                          "lang"]
+    assert df.count() > 0
 
 
-if __name__ == "__main__":
-    main()
+def test_no_duplicate_top_level_defs():
+    # a second def of a name silently replaces the first (an oracle
+    # helper swapped this way once went unnoticed)
+    with open(em.__file__) as fh:
+        tree = ast.parse(fh.read())
+    counts = collections.Counter(
+        n.name for n in tree.body if isinstance(n, ast.FunctionDef))
+    dupes = {k: c for k, c in counts.items() if c > 1}
+    assert not dupes, f"duplicate top-level defs: {dupes}"
+
+
+def test_oracle_coverage():
+    assert set(ORACLES) <= set(QUERIES)
+    assert set(QUERIES) - set(ORACLES) == ROWS_ONLY
+
+
+def test_plan_specs_name_registry_entries():
+    assert set(PLAN_SPECS) - set(QUERIES) == {"quality_top_fraction_approx"}

@@ -7,8 +7,8 @@ on IDENTICAL input at local[N] and local[4N], with N = host cores // 4
 has no N -> 4N pair and the tool refuses to run.
 
 Each level runs in its own subprocess (fresh JVM, fresh Python worker
-pool) with the driver memory bench.py uses: one untimed warm-up on the
-real input, then bench.REPS timed reps. Per level it reports every rep
+pool) in bench.py's session shape (bench.session): one untimed warm-up
+on the real input, then bench.REPS timed reps. Per level it reports every rep
 and the median pages/sec; efficiency = median(4N) / (4 x median(N)).
 identical_output checks that every rep at every level produced the same
 (clipped points, interpolated cells) pair. The report is printed as one
@@ -34,7 +34,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from bench import (HOST, REPS, _flagship_pipeline, prepare_pages,  # noqa: E402
-                   time_reps)
+                   session, time_reps)
 
 N_PAGES = int(os.environ.get("SPARK_GRAFT_PAGES", "1000000"))
 
@@ -61,13 +61,7 @@ def identical_output(levels) -> bool:
 
 def run_level(cores: int, n_pages: int) -> dict:
     """the flagship at local[cores]: warm-up, then REPS timed reps."""
-    from osc_geo_h3grid_srv_spark.engine import make_spark
-
-    spark = make_spark(cores=cores,
-                       shuffle_partitions=max(cores * 2, 16),
-                       extra_conf={"spark.ui.enabled": "false",
-                                   "spark.driver.memory":
-                                       f"{HOST.driver_memory_mb}m"})
+    spark = session(cores)
     pages_path = prepare_pages(spark, n_pages)
     # warm-up on the REAL input, untimed: spawns+imports the python worker
     # pool, JIT-compiles the exact generated code for this plan, and warms
