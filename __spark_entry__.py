@@ -154,8 +154,10 @@ def q_correlator_null_filters(spark, sf_dir):
 
 def q_idw_knn(spark, sf_dir):
     """J5: inverse-distance-weighted kNN interpolation, k=3 power=2
-    (reference constants geomesh.py:44, cli_geospatial.py:36-39), grid
-    candidate join + window top-k - the engine's scale pattern."""
+    (reference constants geomesh.py:44, cli_geospatial.py:36-39): the
+    collected cell grid is bucketed and broadcast, one Arrow pass keeps
+    each batch's top-k per cell, and a window merges them - the
+    engine's scale pattern."""
     from pyspark.sql import functions as F
     from osc_geo_h3grid_srv_spark.operators.interpolate import (
         idw_interpolate)
@@ -191,7 +193,8 @@ def q_idw_knn_highlat(spark, sf_dir):
     """J5 adversarial gate (round-3): sparse points at 0.75-0.95x
     max_dist due east/west of each cell at lat 48..84 - the regime
     where the pre-fix single-pitch bucket grid silently dropped true
-    neighbors (VERDICT r02 What's-wrong #1). Brute-force DuckDB oracle;
+    neighbors (VERDICT r02 What's-wrong #1); the Arrow pass buckets
+    with the same per-band pitch rule. Brute-force DuckDB oracle;
     n_neighbors must be 3 for every cell."""
     from pyspark.sql import functions as F
     from osc_geo_h3grid_srv_spark.operators.interpolate import (

@@ -107,8 +107,7 @@ def _flagship_pipeline(spark, pages_path):
     # region's cells, not just populated ones). The grid comes from the
     # driver-side kernel polyfill (~1 ms for ~10^3 cells) — round 1
     # derived it with distinct+coalesce(1) over the data, which added a
-    # serial micro-job to every run; Arrow createDataFrame + broadcast
-    # join keep the big points side shuffle-free for the join.
+    # serial micro-job to every run.
     import pandas as pd
 
     from osc_geo_h3grid_srv_spark.functions import h3core
@@ -120,10 +119,10 @@ def _flagship_pipeline(spark, pages_path):
     pts_v = clipped.select(
         "latitude", "longitude",
         (F.xxhash64("url") % 1000).cast("double").alias("value"))
-    # region-bounded res-5 grid -> broadcast side of the join; the big
-    # points side is never shuffled for the join
+    # region-bounded res-5 grid, broadcast to one Arrow pass over the
+    # points
     interp = idw_interpolate(cells, pts_v, "value", k=3, power=2.0,
-                             max_dist_km=60.0, broadcast_cells=True)
+                             max_dist_km=60.0)
     n_interp = interp.count()
     clipped.unpersist()
     return n_clip, n_interp

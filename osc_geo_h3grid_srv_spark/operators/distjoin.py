@@ -20,9 +20,8 @@ self-join with the identical formula — a banding bound that drops one
 true pair flips the value hash (the same gate discipline as
 idw_knn_highlat).
 
-Scale: candidates are bounded by per-bucket density, not corpus size —
-the same shape that lets J5 interpolate 10^9 points; the only shuffle
-is the bucket equi-join.
+Scale: candidates are bounded by per-bucket density, not corpus size;
+the only shuffle is the bucket equi-join.
 """
 
 from __future__ import annotations

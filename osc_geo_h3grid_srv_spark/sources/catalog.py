@@ -61,6 +61,13 @@ _TYPE_ALIASES = {
 }
 _COMPOSITE = ("ARRAY", "LIST", "MAP", "STRUCT", "UNION")
 _NAME_RE = re.compile(r"^[A-Za-z0-9_]+$")
+# a catalog read names every file from the manifest, so Spark's listing
+# is one local status call per path (~1 ms). Above the default threshold
+# of 32 paths Spark runs it as a parallel job instead — one task per
+# path, seconds for a few hundred files — so the catalog's session never
+# takes that route.
+_LISTING_THRESHOLD = (
+    "spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
 
 _TO_SPARK = {
     "BIGINT": "long", "BIT": "binary", "BLOB": "binary",
@@ -138,6 +145,8 @@ class Catalog:
     def __init__(self, warehouse_dir: str, spark=None):
         self.root = warehouse_dir
         self.spark = spark
+        if spark is not None:
+            spark.conf.set(*_LISTING_THRESHOLD)
         os.makedirs(self.root, exist_ok=True)
 
     # -- snapshot table layer ------------------------------------------------

@@ -154,10 +154,13 @@ def _grid_df(spark, packed, res):
 
 
 def _interpolate_grid(cells_t, pts, data_cols, keys, k, power, d0, diag):
-    """expanding-radius exact kNN: rounds of the bucketed IDW join, each
-    keeping cells that found all k neighbors; the final round's radius
-    covers the whole region so remaining cells get their true (possibly
-    < k) neighbor set. Returns the union of all rounds."""
+    """expanding-radius exact kNN: rounds of IDW, each keeping cells
+    that found all k neighbors; the final round's radius covers the
+    whole region so remaining cells get their true (possibly < k)
+    neighbor set. Returns the union of all rounds. idw_interpolate
+    collects each round's grid, so `remaining` is checkpointed: the
+    collect then runs only the round just finished, not every earlier
+    one again."""
     from ..operators.interpolate import idw_interpolate
     id_cols = ["h3_cell"] + keys
     remaining = cells_t
@@ -166,15 +169,15 @@ def _interpolate_grid(cells_t, pts, data_cols, keys, k, power, d0, diag):
     while True:
         last = md >= diag
         got = idw_interpolate(remaining, pts, data_cols, k=k, power=power,
-                              max_dist_km=md, key_cols=keys,
-                              broadcast_cells=True)
+                              max_dist_km=md, key_cols=keys)
         if last:
             done.append(got)
             break
         full = got.filter(F.col("n_neighbors") >= k)
         done.append(full)
         remaining = remaining.join(full.select(*id_cols), on=id_cols,
-                                   how="left_anti")
+                                   how="left_anti").localCheckpoint(
+                                       eager=False)
         md = min(md * 4, diag)
     out = done[0]
     for d in done[1:]:

@@ -414,9 +414,13 @@ def test_catalog_reads_plan_without_spark_jobs(spark, engine, pp_prune,
                                                 tmp_path):
     """building a DataFrame from a manifest that records its schema runs
     no Spark job: no footer is read to infer the schema, also when the
-    snapshot's files disagree on columns (an append added one)."""
+    snapshot's files disagree on columns (an append added one), and no
+    file listing runs as a job, also for a snapshot of more than 32
+    files."""
     from osc_geo_h3grid_srv_spark.sources.catalog import Catalog
     cat = Catalog(str(tmp_path / "wh"), spark)
+    cat.write("wide", spark.range(80).repartition(40))
+    assert len(cat.read_manifest("wide")["files"]) > 32
     for name, part in (("flat", None), ("parted", ["p"])):
         cat.write(name, spark.range(4).select(
             F.col("id"), (F.col("id") % 2).cast("string").alias("p")),
@@ -430,7 +434,8 @@ def test_catalog_reads_plan_without_spark_jobs(spark, engine, pp_prune,
     try:
         frames = [cat.load("flat"), cat.load("parted"),
                   cat.load("parted", partitions={"p": {"1"}}),
-                  engine.radius("pp_prune", 52.52, 13.40, 20.0)]
+                  engine.radius("pp_prune", 52.52, 13.40, 20.0),
+                  cat.load("wide")]
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(
@@ -443,6 +448,7 @@ def test_catalog_reads_plan_without_spark_jobs(spark, engine, pp_prune,
     assert sorted(tuple(r) for r in frames[0].collect()) == [
         (0, "0", None), (1, "1", None), (2, "0", None), (3, "1", None),
         (4, "0", 40), (5, "1", 50)]
+    assert sorted(r.id for r in frames[4].collect()) == list(range(80))
 
 
 @pytest.fixture(scope="module")

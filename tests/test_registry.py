@@ -85,8 +85,9 @@ PLAN_SPECS = {
         "expect": ["codegen id", "Window"],
         "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin",
                    "ArrowEvalPython"],
-        "note": "J5 kNN-IDW: bucket equi-join + window top-k; the "
-                "plan must never degenerate to a cross join",
+        "note": "J5 kNN-IDW: per-batch top-k in one Arrow pass over "
+                "the points, broadcast-joined to the grid on the row "
+                "index, then the window top-k; never a cross join",
     },
     "region_semi_join": {
         "expect": ["LeftSemi|INSET"],
@@ -155,8 +156,8 @@ PLAN_SPECS = {
         "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin",
                    "ArrowEvalPython"],
         "note": "J5 adversarial high-latitude gate: the latitude-banded "
-                "bucket grid must keep the same equi-join + window shape "
-                "as the equatorial case — no cross-join fallback",
+                "bucket grid must keep the same Arrow pass + window "
+                "shape as the equatorial case — no cross-join fallback",
     },
     "pii_redaction_stats": {
         "expect": ["HashAggregate", "codegen id"],
