@@ -1,5 +1,7 @@
 """GeoMeshEngine: the engine facade - same operations as the reference's
-REST/CLI surface (SURVEY.md SS2.9), returning DataFrames.
+REST/CLI surface (SURVEY.md SS2.9), returning DataFrames. Each query
+route is one DatasetQueries call for h3 and point datasets alike; the
+dataset-type rules live in operators/queries.py.
 
 Usage:
     eng = GeoMeshEngine(spark, warehouse_dir)
@@ -76,22 +78,14 @@ class GeoMeshEngine:
     # -- SS2.9 query surface --------------------------------------------------
 
     def radius(self, dataset, lat, lng, radius_km, resolution=3, **tkw):
-        q = self.queries(dataset)
-        if q.ds_type == "point":
-            return q.latlong_radius_point(lat, lng, radius_km, **tkw)
-        return q.latlong_radius(lat, lng, radius_km, resolution, **tkw)
+        return self.queries(dataset).latlong_radius(lat, lng, radius_km,
+                                                    resolution, **tkw)
 
     def cell_radius(self, dataset, cell, radius_km, **tkw):
-        q = self.queries(dataset)
-        if q.ds_type == "point":
-            return q.cell_radius_point(cell, radius_km, **tkw)
-        return q.cell_radius(cell, radius_km, **tkw)
+        return self.queries(dataset).cell_radius(cell, radius_km, **tkw)
 
     def cell_point(self, dataset, cell, **tkw):
-        q = self.queries(dataset)
-        if q.ds_type == "point":
-            return q.cell_point_point(cell, **tkw)
-        return q.cell_point(cell, **tkw)
+        return self.queries(dataset).cell_point(cell, **tkw)
 
     def latlong_point(self, dataset, lat, lng, resolution=7, **tkw):
         return self.queries(dataset).latlong_point(lat, lng, resolution,
@@ -99,10 +93,8 @@ class GeoMeshEngine:
 
     def shapefile_get(self, dataset, polygons, region=None, resolution=7,
                       **tkw):
-        q = self.queries(dataset)
-        if q.ds_type == "point":
-            return q.shapefile_point(polygons, region, **tkw)
-        return q.shapefile(polygons, region, resolution, **tkw)
+        return self.queries(dataset).shapefile(polygons, region, resolution,
+                                               **tkw)
 
     def bounding_box(self, dataset, lat_min, lat_max, lng_min, lng_max,
                      **tkw):

@@ -331,26 +331,8 @@ def _down_ap7r(i, j, k):  # cw
     return _ijk_normalize(ni, nj, nk)
 
 
-def _down_ap3(i, j, k):
-    ni = 2 * i + 1 * j + 0 * k
-    nj = 0 * i + 2 * j + 1 * k
-    nk = 1 * i + 0 * j + 2 * k
-    return _ijk_normalize(ni, nj, nk)
-
-
-def _down_ap3r(i, j, k):
-    ni = 2 * i + 0 * j + 1 * k
-    nj = 1 * i + 2 * j + 0 * k
-    nk = 0 * i + 1 * j + 2 * k
-    return _ijk_normalize(ni, nj, nk)
-
-
 def _ijk_rotate60_ccw(i, j, k):
     return _ijk_normalize(i + k, i + j, j + k)
-
-
-def _ijk_rotate60_cw(i, j, k):
-    return _ijk_normalize(i + j, j + k, i + k)
 
 
 _UNIT_LUT = np.full(8, -1, dtype=np.int8)
@@ -707,18 +689,6 @@ def is_pentagon(h):
     return pent & ~nonzero
 
 
-def _rotate_digits(digits, n, pentagon=False):
-    """rotate all digits of each row ccw by n[i] steps (n: per-row array).
-    pentagon variant (_h3RotatePent60ccw iterated) handled by caller."""
-    out = digits.copy()
-    for step in range(1, 6):
-        m = n >= step
-        if not m.any():
-            continue
-        out[m] = _ROT_CCW[out[m]]
-    return out
-
-
 def _leading_nonzero_digit(digits):
     """per-row first nonzero digit (0 if none; res-0 cells have zero
     digit columns -> all 0)."""
@@ -729,11 +699,6 @@ def _leading_nonzero_digit(digits):
     has = nz.any(axis=1)
     lead = digits[np.arange(digits.shape[0]), first]
     return np.where(has, lead, 0).astype(np.int8)
-
-
-def _rotate60ccw_index_digits(digits, mask):
-    digits[mask] = _ROT_CCW[digits[mask]]
-    return digits
 
 
 def _h3_rotate_pent60_ccw_rows(digits, rows):
@@ -1121,11 +1086,6 @@ def k_ring(h, k):
     la, lo = _hex2d_to_geo(F.ravel(), X.ravel(), Y.ravel(), res)
     cells = latlng_to_cell(np.degrees(la), np.degrees(lo), res)
     return cells.reshape(h.shape[0], offs.shape[0])
-
-
-def grid_disk(h, k):
-    """alias matching h3-py v4 naming."""
-    return k_ring(h, k)
 
 
 def cell_boundary(h):

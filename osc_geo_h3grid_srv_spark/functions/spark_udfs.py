@@ -6,8 +6,8 @@ replace; BASELINE.json: "no per-row Python anywhere on the hot path").
 
 Cell ids travel as int64 (bit-identical reinterpretation of the uint64 H3
 index) - joins/groupBys on longs are far cheaper than on strings. Use
-cell_str/cell_int to convert at API edges where the reference exposes hex
-strings (h3_cell VARCHAR columns).
+cell_str to convert at API edges where the reference exposes hex strings
+(h3_cell VARCHAR columns).
 """
 
 from __future__ import annotations
@@ -40,20 +40,6 @@ def make_latlng_to_cell(res: int):
     return latlng_to_cell_udf
 
 
-@pandas_udf(T.LongType())
-def latlng_to_cell_var(lat: pd.Series, lng: pd.Series,
-                       res: pd.Series) -> pd.Series:
-    """variable-resolution cell assignment (res as a column)."""
-    la = lat.to_numpy(dtype=np.float64)
-    lo = lng.to_numpy(dtype=np.float64)
-    rr = res.to_numpy(dtype=np.int64)
-    out = np.zeros(len(la), dtype=np.uint64)
-    for r in np.unique(rr):
-        m = rr == r
-        out[m] = h3core.latlng_to_cell(la[m], lo[m], int(r))
-    return _i64(out)
-
-
 @pandas_udf(T.DoubleType())
 def cell_lat(cell: pd.Series) -> pd.Series:
     la, _ = h3core.cell_to_latlng(_u64(cell))
@@ -73,35 +59,12 @@ def make_cell_to_parent(parent_res: int):
     return cell_to_parent_udf
 
 
-@pandas_udf(T.IntegerType())
-def cell_resolution(cell: pd.Series) -> pd.Series:
-    return pd.Series(h3core.get_resolution(_u64(cell)).astype(np.int32))
-
-
 @pandas_udf(T.StringType())
 def cell_str(cell: pd.Series) -> pd.Series:
     return pd.Series(h3core.cell_to_string(_u64(cell)))
 
 
-@pandas_udf(T.LongType())
-def cell_int(cell_hex: pd.Series) -> pd.Series:
-    return _i64(h3core.string_to_cell(cell_hex.to_numpy()))
-
-
-def make_k_ring(k: int):
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def k_ring_udf(cell: pd.Series) -> pd.Series:
-        rings = h3core.k_ring(_u64(cell), k).view(np.int64)
-        return pd.Series(list(rings))
-    return k_ring_udf
-
-
 # -- text / page kernels -----------------------------------------------------
-
-@pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return textf.extract_text(html)
-
 
 @pandas_udf(T.StringType())
 def lang_id_udf(text: pd.Series) -> pd.Series:
@@ -139,18 +102,6 @@ def pip_udf_for(packed_bc):
             lat.to_numpy(dtype=np.float64), lng.to_numpy(dtype=np.float64),
             pp))
     return pip
-
-
-def boundary_dist_udf_for(packed_bc):
-    from . import geo as geomod
-
-    @pandas_udf(T.DoubleType())
-    def bdist(lat: pd.Series, lng: pd.Series) -> pd.Series:
-        pp = geomod.PackedPolygons(*packed_bc.value)
-        return pd.Series(geomod.points_to_boundary_deg(
-            lat.to_numpy(dtype=np.float64), lng.to_numpy(dtype=np.float64),
-            pp))
-    return bdist
 
 
 # -- relational expression helpers (pure Column math, no UDF) ----------------

@@ -182,13 +182,6 @@ def _spread(docs: DataFrame) -> DataFrame:
     return docs
 
 
-def _gram_terms(docs: DataFrame, id_col: str, text_col: str,
-                n: int) -> DataFrame:
-    """(id, term) distinct word-n-gram posting relation."""
-    return (_gram_sets(docs, id_col, text_col, n)
-            .select("id", F.explode("ts").alias("term")))
-
-
 #: per-posting fan-out ceiling for the count-based exact path: the
 #: postings self-join emits sum(df^2) rows, i.e. (sum(df^2)/sum(df))
 #: rows PER posting on average — choose the count path only when that

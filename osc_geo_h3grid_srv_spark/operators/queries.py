@@ -7,12 +7,20 @@ guard (geomesh.py:668-687, 1225-1299); time-filter inference
 (geomesh.py:1140-1186); empty filter set => no WHERE (fixing reference
 defect D4); results compared as row SETS (the reference never ORDERs).
 
+The reference serves h3 datasets (geomesh_router) and point datasets
+(point_router) through twin handlers; DatasetQueries has one method per
+route serving both, and this module is the only one that branches on the
+dataset type: the radius guard, the projection (_project), the cell
+column cell_point filters on and the shapefile algorithm.
+
 All filters/projections are pure Column expressions -> Catalyst pushes
 them into the Parquet scan (predicate pushdown + column pruning); the
-only pandas UDF on these paths is H3 cell assignment for lat/lng lookups.
+only pandas UDF on these paths is the point-dataset shapefile PIP test.
 """
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -63,28 +71,9 @@ def _radius_guard(radius_km, res, is_point_dataset):
     return float(radius_km)
 
 
-def _select_cells(df, value_columns):
-    """P1 projection for h3/h3_index datasets (geomesh.py:688-692)."""
-    return df.select(CELL_COL, "latitude", "longitude", *value_columns)
-
-
-def _point_res_columns(df):
-    """res{r} columns of a point dataset (dataset_utilities.py:19-24)."""
-    import re
-    return [c for c in df.columns
-            if re.fullmatch(r"res[0-9]|res1[0-5]", c)]
-
-
-def _select_points(df, value_columns):
-    """projection for point datasets: values + lat/lng + res cols
-    (geomesh.py:395-399)."""
-    res_cols = _point_res_columns(df)
-    return df.select(*value_columns, "latitude", "longitude", *res_cols)
-
-
 class DatasetQueries:
-    """query operators over a registered dataset; `load` yields the
-    dataset's DataFrame (engine injects catalog.load + metadata)."""
+    """the query routes over one registered dataset, h3/h3_index or
+    point; `load` yields the dataset's DataFrame."""
 
     def __init__(self, catalog, dataset):
         self.catalog = catalog
@@ -134,7 +123,6 @@ class DatasetQueries:
         Wrap handling: a bbox that crosses the antimeridian (lo_min <
         -180 or lo_max > 180) is split into both longitude segments; a
         bbox reaching over a pole covers every longitude."""
-        import re as _re
         if la_max > 90.0 or la_min < -90.0:  # over a pole: all lngs
             lo_min, lo_max = -180.0, 180.0
             la_min, la_max = max(la_min, -90.0), min(la_max, 90.0)
@@ -148,7 +136,7 @@ class DatasetQueries:
         boxes.append((la_min, la_max, lo_min, lo_max))
         parts = {}
         for col in man["partition_by"]:
-            m = _re.fullmatch(r"p(\d{1,2})", col)
+            m = re.fullmatch(r"p(\d{1,2})", col)
             if not m:
                 continue
             vals = set()
@@ -159,25 +147,36 @@ class DatasetQueries:
             parts[col] = vals
         return parts or None
 
+    def _project(self, df):
+        """P1 projection. h3 datasets: cell, centroid, values
+        (geomesh.py:688-692). Point datasets: values, lat/lng and the
+        res{r} columns (geomesh.py:395-399, dataset_utilities.py:19-24)."""
+        if self.ds_type == "point":
+            res_cols = [c for c in df.columns
+                        if re.fullmatch(r"res[0-9]|res1[0-5]", c)]
+            return df.select(*self.value_columns, "latitude", "longitude",
+                             *res_cols)
+        return df.select(CELL_COL, "latitude", "longitude",
+                         *self.value_columns)
+
     # -- radius queries (geomesh.py:539-576 / 480-537 / 417-478) ------------
 
     def latlong_radius(self, lat, lng, radius_km, resolution=3,
                        year=None, month=None, day=None):
-        """POST /api/geomesh/latlong/radius/{ds} - rows whose (centroid)
-        lat/lng lies within radius_km of the given point."""
-        if self.ds_type not in ("h3", "h3_index"):
-            raise ValueError(f"dataset {self.dataset} is not h3/h3_index")
-        r = _radius_guard(radius_km, resolution, is_point_dataset=False)
-        # h3 datasets carry cell-centroid latitude/longitude, so the
-        # same cap-bbox partition pruning as the point path applies
-        # (round 2: previously only the point path pruned)
+        """POST /api/geomesh/latlong/radius/{ds} and
+        /api/datasets/point/latlong/radius/{ds} - rows whose lat/lng (the
+        cell centroid on h3 datasets) lies within radius_km of the given
+        point. `resolution` sets the h3 minimum-radius guard; point
+        datasets only reject a negative radius."""
+        r = _radius_guard(radius_km, resolution,
+                          is_point_dataset=self.ds_type == "point")
         df = self._timed(year, month, day, None if r is None
                          else self._radius_bbox(lat, lng, r))
         if r is not None:
             df = df.filter(
                 reference_radius_expr("latitude", "longitude", lat, lng)
                 <= F.lit(r))
-        return _select_cells(df, self.value_columns)
+        return self._project(df)
 
     @staticmethod
     def _radius_bbox(lat, lng, r):
@@ -199,24 +198,10 @@ class DatasetQueries:
             dlo = np.degrees(np.arcsin(sin_c / cos_lat)) * 1.01
         return lat - dla, lat + dla, lng - dlo, lng + dlo
 
-    def latlong_radius_point(self, lat, lng, radius_km,
-                             year=None, month=None, day=None):
-        """POST /api/datasets/point/latlong/radius/{ds}."""
-        if self.ds_type != "point":
-            raise ValueError(f"dataset {self.dataset} is not a point dataset")
-        r = _radius_guard(radius_km, 0, is_point_dataset=True)
-        df = self._timed(year, month, day, None if r is None
-                         else self._radius_bbox(lat, lng, r))
-        if r is not None:
-            df = df.filter(
-                reference_radius_expr("latitude", "longitude", lat, lng)
-                <= F.lit(r))
-        return _select_points(df, self.value_columns)
-
     def cell_radius(self, cell_hex, radius_km, year=None, month=None,
                     day=None):
-        """POST /api/geomesh/cell/radius/{ds}: radius around the cell's
-        centroid (geomesh.py:417-458)."""
+        """POST .../cell/radius/{ds}: radius around the cell's centroid
+        (geomesh.py:417-458); the cell's resolution sets the h3 guard."""
         cid = h3core.string_to_cell(np.array([cell_hex]))
         res = int(h3core.get_resolution(cid)[0])
         clat, clng = h3core.cell_to_latlng(cid)
@@ -224,37 +209,25 @@ class DatasetQueries:
                                    resolution=res, year=year, month=month,
                                    day=day)
 
-    def cell_radius_point(self, cell_hex, radius_km, year=None, month=None,
-                          day=None):
-        cid = h3core.string_to_cell(np.array([cell_hex]))
-        clat, clng = h3core.cell_to_latlng(cid)
-        return self.latlong_radius_point(float(clat[0]), float(clng[0]),
-                                         radius_km, year=year, month=month,
-                                         day=day)
-
     # -- point lookups (geomesh.py:700-903) ----------------------------------
 
     def cell_point(self, cell_hex, year=None, month=None, day=None):
-        """POST /api/geomesh/cell/point/{ds}: the single row of this cell
-        (P9; geomesh.py:700-782)."""
-        df = self._timed(year, month, day)
-        df = df.filter(F.col(CELL_COL) == F.lit(cell_hex))
-        return _select_cells(df, self.value_columns)
-
-    def cell_point_point(self, cell_hex, year=None, month=None, day=None):
-        """point-dataset variant: filter on the res{r} column matching the
-        query cell's resolution (geomesh.py:836-855)."""
+        """POST .../cell/point/{ds}: the rows of this cell - h3_cell
+        equality on h3 datasets (P9; geomesh.py:700-782), equality on the
+        res{r} column of the cell's resolution on point datasets
+        (geomesh.py:836-855). Files are planned from the cell's boundary
+        bbox."""
         cid = h3core.string_to_cell(np.array([cell_hex]))
-        res = int(h3core.get_resolution(cid)[0])
         bverts = h3core.cell_boundary(cid)[0]  # (6, 2) lat,lng
         df = self._timed(year, month, day, (
             float(bverts[:, 0].min()), float(bverts[:, 0].max()),
             float(bverts[:, 1].min()), float(bverts[:, 1].max())))
-        col = f"res{res}"
-        if col not in df.columns:
-            raise ValueError(f"dataset has no {col} column")
-        df = df.filter(F.col(col) == F.lit(cell_hex))
-        return _select_points(df, self.value_columns)
+        col = CELL_COL
+        if self.ds_type == "point":
+            col = f"res{int(h3core.get_resolution(cid)[0])}"
+            if col not in df.columns:
+                raise ValueError(f"dataset has no {col} column")
+        return self._project(df.filter(F.col(col) == F.lit(cell_hex)))
 
     def latlong_point(self, lat, lng, resolution=7, year=None, month=None,
                       day=None):
@@ -263,79 +236,55 @@ class DatasetQueries:
         cell = h3core.cell_to_string(
             h3core.latlng_to_cell(np.array([lat]), np.array([lng]),
                                   resolution))[0]
-        if self.ds_type == "point":
-            return self.cell_point_point(cell, year, month, day)
         return self.cell_point(cell, year, month, day)
 
     # -- bbox + shapefile retrieval (geomesh.py:152-414, 951-1064) ----------
 
     def bounding_box(self, lat_min, lat_max, lng_min, lng_max,
-                     year=None, month=None, day=None, exact_cells=True):
-        """bounding_box_get (geomesh.py:951-1064): for h3 datasets the
-        reference polyfills the bbox and does IN-list membership; the row
-        set equals a lat/lng BETWEEN filter on cell centroids when
-        exact_cells=False (cheap path). exact_cells=True reproduces the
-        polyfill->membership semantics (centroid-in-bbox of cells)."""
+                     year=None, month=None, day=None):
+        """bounding_box_get (geomesh.py:951-1064): rows whose lat/lng lies
+        in the bbox. On h3 datasets the reference polyfills the bbox and
+        tests cell membership; polyfill keeps the cells whose centroid is
+        inside, so a BETWEEN filter on the centroid columns is the same
+        row set."""
         df = self._timed(year, month, day, (
             float(lat_min), float(lat_max), float(lng_min), float(lng_max)))
-        cond = (F.col("latitude").between(float(lat_min), float(lat_max))
-                & F.col("longitude").between(float(lng_min), float(lng_max)))
-        df = df.filter(cond)
-        if self.ds_type == "point":
-            return _select_points(df, self.value_columns)
-        return _select_cells(df, self.value_columns)
+        return self._project(df.filter(
+            F.col("latitude").between(float(lat_min), float(lat_max))
+            & F.col("longitude").between(float(lng_min), float(lng_max))))
 
     def shapefile(self, polygons: geo.PackedPolygons, region=None,
                   resolution=7, year=None, month=None, day=None):
-        """shapefile_get (geomesh.py:152-292): polyfill the (buffered)
-        region at `resolution`, then semi-join the dataset on cell id.
-        J2: the reference's <=20k-id IN chunks become one broadcast
-        left-semi join."""
+        """shapefile_get / shapefile_get_point (geomesh.py:152-414).
+
+        h3 datasets: the (buffered) region's cells at `resolution` from
+        enumerate_region_cells, semi-joined on h3_cell (J2: the
+        reference's <=20k-id IN chunks become one broadcast left-semi
+        join). Point datasets: bbox prefilter + exact PIP via a broadcast
+        polygon pandas UDF (J3); `resolution` is unused. The reference's
+        own PIP refinement is dead code (defect D1: the lazy filter() at
+        geomesh.py:407-413 is never consumed), so it returns the bbox
+        rows; this returns the rows inside the region."""
         if region is not None:
             if not polygons.contains_region(region):
                 raise ValueError(f"region {region!r} not in shapefile")
             polygons = polygons.filter_name(region)
-        buffer_deg = geo.get_buffer_deg(resolution)
-        import pandas as pd
-        cells = h3core.cell_to_string(
-            geo.polyfill(polygons, resolution, buffer_deg=buffer_deg))
-        spark = self.catalog.spark
-        cells_df = spark.createDataFrame(
-            pd.DataFrame({CELL_COL: cells}))
-        df = self._timed(year, month, day)
-        df = df.join(F.broadcast(cells_df), on=CELL_COL, how="left_semi")
-        return _select_cells(df, self.value_columns)
-
-    def shapefile_point(self, polygons: geo.PackedPolygons, region=None,
-                        year=None, month=None, day=None, bbox_only=False):
-        """shapefile_get_point (geomesh.py:294-414). The reference's exact
-        point-in-polygon refinement is dead code (defect D1: the lazy
-        filter() at geomesh.py:407-413 is never consumed), so its
-        effective semantics are bbox+time only; bbox_only=True reproduces
-        that. Default is the intended semantics: bbox prefilter + exact
-        PIP via a broadcast polygon pandas UDF (J3)."""
-        if region is not None:
-            if not polygons.contains_region(region):
-                raise ValueError(f"region {region!r} not in shapefile")
-            polygons = polygons.filter_name(region)
-        la_min, la_max, lo_min, lo_max = polygons.bounds()
-        df = self._timed(year, month, day, (
-            float(la_min), float(la_max), float(lo_min), float(lo_max)))
-        df = df.filter(
-            F.col("latitude").between(float(la_min), float(la_max))
-            & F.col("longitude").between(float(lo_min), float(lo_max)))
-        if not bbox_only:
-            from ..functions.spark_udfs import pip_udf_for
-            bc = self.catalog.spark.sparkContext.broadcast(
-                polygons.to_arrays())
-            pip = pip_udf_for(bc)
-            df = df.filter(pip(F.col("latitude"), F.col("longitude")))
-        return _select_points(df, self.value_columns)
-
-    def filter_cells(self, polygons: geo.PackedPolygons, region=None,
-                     resolution=7, tolerance=None):
-        return enumerate_region_cells(self.catalog.spark, polygons, region,
-                                      resolution, tolerance)
+        if self.ds_type != "point":
+            cells = enumerate_region_cells(
+                self.catalog.spark, polygons, resolution=resolution
+            ).withColumnRenamed("cell", CELL_COL)
+            df = self._timed(year, month, day)
+            return self._project(df.join(F.broadcast(cells), on=CELL_COL,
+                                         how="left_semi"))
+        from ..functions.spark_udfs import pip_udf_for
+        la_min, la_max, lo_min, lo_max = (float(v) for v in polygons.bounds())
+        df = self._timed(year, month, day, (la_min, la_max, lo_min, lo_max))
+        pip = pip_udf_for(self.catalog.spark.sparkContext.broadcast(
+            polygons.to_arrays()))
+        df = df.filter(F.col("latitude").between(la_min, la_max)
+                       & F.col("longitude").between(lo_min, lo_max))
+        return self._project(df.filter(pip(F.col("latitude"),
+                                           F.col("longitude"))))
 
 
 def enumerate_region_cells(spark, polygons: geo.PackedPolygons, region=None,

@@ -69,19 +69,6 @@ _NAME_RE = re.compile(r"^[A-Za-z0-9_]+$")
 _LISTING_THRESHOLD = (
     "spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
 
-_TO_SPARK = {
-    "BIGINT": "long", "BIT": "binary", "BLOB": "binary",
-    "BOOLEAN": "boolean", "DATE": "date", "DECIMAL": "decimal(38,9)",
-    "DOUBLE": "double", "HUGEINT": "decimal(38,0)", "INTEGER": "int",
-    "INTERVAL": "interval day to second", "REAL": "float",
-    "SMALLINT": "short", "TIME": "string",
-    "TIMESTAMP": "timestamp", "TIMESTAMP WITH TIME ZONE": "timestamp",
-    "TINYINT": "byte", "UBIGINT": "decimal(20,0)", "UINTEGER": "long",
-    "USMALLINT": "int", "UTINYINT": "short", "UUID": "string",
-    "VARCHAR": "string",
-}
-
-
 def canonical_type(t: str) -> str:
     """canonicalize a declared column type; raises on composite/unknown
     (duckdbutils.py:127-171 semantics)."""
@@ -95,10 +82,6 @@ def canonical_type(t: str) -> str:
     if base in _GENERAL_TYPES or up in _GENERAL_TYPES:
         return _TYPE_ALIASES.get(base, base)
     raise ValueError(f"not a valid general column type: {t}")
-
-
-def duckdb_to_spark_type(t: str) -> str:
-    return _TO_SPARK[canonical_type(t)]
 
 
 def validate_column_name(name: str):
@@ -198,8 +181,7 @@ class Catalog:
         if mode == "append" and parent is not None:
             pman = self.read_manifest(table, parent)
             files = pman["files"] + files
-            schema = self._evolve_schema(table, pman.get("schema"),
-                                         schema)
+            schema = self._evolve_schema(table, pman["schema"], schema)
         return self._commit(
             table, parent, mode, partition_by or [], schema, files,
             lineage or {}, dict(metrics or {}, commit_wall_clock_s=round(
@@ -246,8 +228,6 @@ class Catalog:
         snapshot schema is the parent order with genuinely-new columns
         appended, so time travel shows each snapshot exactly the columns
         it had."""
-        if parent_schema is None:
-            return new_schema  # pre-evolution manifest (back-compat)
         ptypes = {c["name"]: c["type"] for c in parent_schema}
         for c in new_schema:
             old = ptypes.get(c["name"])
@@ -297,7 +277,7 @@ class Catalog:
         selected, as an IN filter never matches null. Pure metadata."""
         if partitions is None:
             return man["files"]
-        types = {c["name"]: c["type"] for c in man.get("schema") or []}
+        types = {c["name"]: c["type"] for c in man["schema"]}
         return [f for f in man["files"]
                 if all(_partition_value(f["partition"][c], types.get(c))
                        in vals
@@ -311,42 +291,36 @@ class Catalog:
         column SET and ORDER — an old snapshot never shows a column added
         later. No planned file gives an empty DataFrame of that
         schema."""
+        from pyspark.sql import functions as F
         files = self.plan_files(man, partitions)
-        schema = man.get("schema")
-        if not files and schema:
+        schema = man["schema"]
+        if not files:
             df = self.spark.createDataFrame([], _ddl(schema))
         else:
             df = self._df_for_files(man["table"], files,
                                     man["partition_by"], schema)
-        if schema:
-            from pyspark.sql import functions as F
-            have = set(df.columns)
-            # cast to the recorded type: hive partition-value inference
-            # may narrow (e.g. a string partition column read back as
-            # int) and the manifest is the source of truth
-            cols = [F.col(c["name"]).cast(c["type"]).alias(c["name"])
-                    if c["name"] in have
-                    else F.lit(None).cast(c["type"]).alias(c["name"])
-                    for c in schema]
-            cols += [F.col(p) for p in man["partition_by"]
-                     if p not in {c["name"] for c in schema}]
-            df = df.select(*cols)
-        return df
+        have = set(df.columns)
+        # cast to the recorded type: hive partition-value inference may
+        # narrow (e.g. a string partition column read back as int) and
+        # the manifest is the source of truth
+        cols = [F.col(c["name"]).cast(c["type"]).alias(c["name"])
+                if c["name"] in have
+                else F.lit(None).cast(c["type"]).alias(c["name"])
+                for c in schema]
+        cols += [F.col(p) for p in man["partition_by"]
+                 if p not in {c["name"] for c in schema}]
+        return df.select(*cols)
 
-    def _df_for_files(self, table, files, partition_by, schema=None):
-        """DataFrame over `files`. With a manifest `schema` the read is
-        given it as DDL, so Spark reads no footer to plan it; a manifest
-        without one (written before schemas were recorded) falls back to
-        mergeSchema inference."""
+    def _df_for_files(self, table, files, partition_by, schema):
+        """DataFrame over `files`, read with the manifest `schema` as
+        DDL, so Spark reads no footer to plan it."""
         paths = [os.path.join(self.root, f["path"]) for f in files]
         if not paths:
             raise KeyError(f"snapshot of {table!r} is empty")
 
         def read(base, base_paths):
-            r = self.spark.read.option("basePath", base)
-            r = r.schema(_ddl(schema)) if schema else \
-                r.option("mergeSchema", "true")
-            return r.parquet(*base_paths)
+            return (self.spark.read.option("basePath", base)
+                    .schema(_ddl(schema)).parquet(*base_paths))
 
         if not partition_by:
             return read(self.root, paths)
@@ -408,7 +382,7 @@ class Catalog:
         if not rewrite:
             return None
         df = self._df_for_files(table, rewrite, man["partition_by"],
-                                man.get("schema"))
+                                man["schema"])
         n_out = max(1, -(-sum(f["bytes"] for f in rewrite)
                          // target_bytes))
         tdir = self._tdir(table)
@@ -442,7 +416,7 @@ class Catalog:
                 "to commit")
         return self._commit(
             table, parent, "compact", man["partition_by"],
-            man.get("schema"), files,
+            man["schema"], files,
             {"stage": "compact", "inputs": {table: parent},
              "rewritten_files": len(rewrite), "new_files": len(new_files)},
             {"commit_wall_clock_s": round(time.time() - t0, 3)})

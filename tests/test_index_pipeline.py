@@ -186,7 +186,7 @@ def test_partition_pruning_radius(engine, pages, capsys):
     index_pages(engine.catalog, pages, dataset="pp_prune",
                 max_res=9, parent_res=1, salt=2)
     q = engine.queries("pp_prune")
-    df = q.latlong_radius_point(52.52, 13.40, 500.0)
+    df = q.latlong_radius(52.52, 13.40, 500.0)
     # parity: pruned plan returns the same rows as a brute filter
     from osc_geo_h3grid_srv_spark.functions.spark_udfs import (
         reference_radius_expr)
@@ -248,7 +248,7 @@ def test_partition_pruning_dateline_radius(engine, spark):
     except ValueError:
         pass
     q = engine.queries("dateline_pts")
-    got = q.latlong_radius_point(0.0, 179.9, 150.0)
+    got = q.latlong_radius(0.0, 179.9, 150.0)
     from osc_geo_h3grid_srv_spark.functions.spark_udfs import (
         reference_radius_expr)
     brute = q.load().filter(
@@ -296,7 +296,7 @@ def test_partition_pruning_near_pole_radius(engine, spark):
         reference_radius_expr)
     for qlat, qlng, r in ((89.0, 10.0, 100.0), (89.5, -120.0, 80.0),
                           (88.6, 179.0, 200.0)):
-        got = q.latlong_radius_point(qlat, qlng, r)
+        got = q.latlong_radius(qlat, qlng, r)
         brute = q.load().filter(
             reference_radius_expr("latitude", "longitude", qlat, qlng)
             <= F.lit(r))
@@ -343,17 +343,17 @@ def test_pruned_builders_match_brute(pp_prune):
             reference_radius_expr("latitude", "longitude", lat, lng)
             <= F.lit(r))
 
-    assert_pruned_equals_brute(q, q.latlong_radius_point(52.52, 13.40, 300.0),
+    assert_pruned_equals_brute(q, q.latlong_radius(52.52, 13.40, 300.0),
                                within(52.52, 13.40, 300.0))
 
     cell7 = h3core.latlng_to_cell(np.array([52.52]), np.array([13.40]), 7)
     clat, clng = h3core.cell_to_latlng(cell7)
     assert_pruned_equals_brute(
-        q, q.cell_radius_point(h3core.cell_to_string(cell7)[0], 200.0),
+        q, q.cell_radius(h3core.cell_to_string(cell7)[0], 200.0),
         within(float(clat[0]), float(clng[0]), 200.0))
 
     res7 = full.filter(F.col("latitude").between(52.0, 53.0)).first()["res7"]
-    assert_pruned_equals_brute(q, q.cell_point_point(res7),
+    assert_pruned_equals_brute(q, q.cell_point(res7),
                                full.filter(F.col("res7") == res7))
 
     assert_pruned_equals_brute(
@@ -364,7 +364,7 @@ def test_pruned_builders_match_brute(pp_prune):
     poly = geo.PackedPolygons.from_latlng_rings(
         [[[(51.5, 12.0), (53.5, 12.5), (52.8, 15.0), (51.5, 12.0)]]],
         names=["tri"])
-    got = q.shapefile_point(poly, region="tri")
+    got = q.shapefile(poly, region="tri")
     pdf = full.toPandas()
     inside = geo.points_in_polys(pdf["latitude"].values,
                                  pdf["longitude"].values, poly)
@@ -375,10 +375,10 @@ def test_mid_ocean_radius_is_empty(pp_prune):
     """no manifest file can match a mid-Pacific radius query: the load is
     an empty DataFrame with the columns and types of a non-empty one."""
     q = pp_prune
-    empty = q.latlong_radius_point(5.0, -170.0, 50.0)
+    empty = q.latlong_radius(5.0, -170.0, 50.0)
     assert empty.inputFiles() == []
     assert empty.count() == 0
-    assert empty.dtypes == q.latlong_radius_point(52.52, 13.40, 50.0).dtypes
+    assert empty.dtypes == q.latlong_radius(52.52, 13.40, 50.0).dtypes
 
 
 def test_point_routes_read_manifest_and_metadata_once(engine, pp_prune,
@@ -491,7 +491,7 @@ def test_edge_radius_reads_fewer_files(edge_pts, lat, lng, r):
     from osc_geo_h3grid_srv_spark.functions.spark_udfs import (
         reference_radius_expr)
     q = edge_pts
-    got = q.latlong_radius_point(lat, lng, r)
+    got = q.latlong_radius(lat, lng, r)
     brute = q.load().filter(
         reference_radius_expr("latitude", "longitude", lat, lng)
         <= F.lit(r))
