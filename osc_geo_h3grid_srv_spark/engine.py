@@ -15,7 +15,7 @@ from pyspark.sql import SparkSession
 
 from .operators import correlate as correlate_op
 from .operators.queries import DatasetQueries
-from .sources.catalog import Catalog
+from .sources.catalog import Catalog, dataset_entry
 
 
 def make_spark(app="osc-geo-h3grid-spark", cores=None, shuffle_partitions=32,
@@ -59,15 +59,14 @@ class GeoMeshEngine:
     def load_dataset_from_df(self, name, df, dataset_type, key_columns,
                              value_columns, description="", partition_by=None,
                              mode="overwrite"):
-        sid = self.catalog.write(name, df, mode=mode,
-                                 partition_by=partition_by,
-                                 lineage={"stage": "load_dataset"})
-        try:
-            self.catalog.add_meta(name, description, key_columns,
-                                  value_columns, dataset_type)
-        except ValueError:
-            pass
-        return sid
+        """write and register `name` in one snapshot; an invalid entry
+        raises before any write. Returns the snapshot id."""
+        entry = dataset_entry(name, description, key_columns, value_columns,
+                              dataset_type)
+        return self.catalog.write(name, df, mode=mode,
+                                  partition_by=partition_by,
+                                  lineage={"stage": "load_dataset"},
+                                  dataset=entry)
 
     def show_meta(self):
         return self.catalog.show_meta()

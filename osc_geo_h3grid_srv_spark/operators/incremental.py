@@ -22,8 +22,6 @@ window over the content hash, deterministic.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -47,15 +45,9 @@ def _reconcile_hashes(catalog, table: str, dedup_col: str):
     except (FileNotFoundError, KeyError):
         hmani, covered = None, 0
     if covered < head["snapshot_id"]:
-        if covered:
-            old_files = {f["path"] for f in
-                         catalog.read_manifest(table, covered)["files"]}
-        else:
-            old_files = set()
-        new_paths = [os.path.join(catalog.root, f["path"])
-                     for f in head["files"] if f["path"] not in old_files]
-        if new_paths:
-            delta = catalog.spark.read.parquet(*new_paths).select(
+        delta = catalog.added_since(head, covered or None)
+        if delta is not None:
+            delta = delta.select(
                 F.md5(F.col(dedup_col)).alias("content_hash"))
             if hmani:
                 # Catalog.compact rewrites already-hashed rows into new
@@ -118,15 +110,9 @@ def incremental_ingest(catalog, new_pages: DataFrame,
     # by _reconcile_hashes on the next run)
     hsid = None
     if n_appended:
-        new_h = (catalog.load(table, sid)
-                 if head is None else None)
-        if new_h is None:
-            old_files = {f["path"] for f in head["files"]}
-            paths = [os.path.join(catalog.root, f["path"])
-                     for f in mani["files"] if f["path"] not in old_files]
-            new_h = catalog.spark.read.parquet(*paths)
-        delta_h = new_h.select(F.md5(F.col(dedup_col))
-                               .alias("content_hash"))
+        delta_h = catalog.added_since(
+            mani, head["snapshot_id"] if head else None).select(
+                F.md5(F.col(dedup_col)).alias("content_hash"))
         hsid = catalog.write(
             _hash_table(table), delta_h,
             mode="append" if existing_hashes is not None else "overwrite",

@@ -25,8 +25,6 @@ and looser near-dedup run incremental_ingest first, then this.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -75,15 +73,8 @@ def _reconcile_sigs(catalog, table: str, dedup_col: str,
     except (FileNotFoundError, KeyError):
         smani, covered = None, 0
     if covered < head["snapshot_id"]:
-        if covered:
-            old = {f["path"] for f in
-                   catalog.read_manifest(table, covered)["files"]}
-        else:
-            old = set()
-        paths = [os.path.join(catalog.root, f["path"])
-                 for f in head["files"] if f["path"] not in old]
-        if paths:
-            delta = catalog.spark.read.parquet(*paths)
+        delta = catalog.added_since(head, covered or None)
+        if delta is not None:
             if smani:
                 # a path-diff alone over-selects after Catalog.compact:
                 # compaction rewrites already-indexed rows into NEW
@@ -193,10 +184,8 @@ def incremental_near_ingest(catalog, new_pages: DataFrame,
     n_appended = mani["total_rows"] - prev_rows
     ssid = None
     if n_appended:
-        old_files = {f["path"] for f in head["files"]} if head else set()
-        paths = [os.path.join(catalog.root, f["path"])
-                 for f in mani["files"] if f["path"] not in old_files]
-        delta = catalog.spark.read.parquet(*paths)
+        delta = catalog.added_since(
+            mani, head["snapshot_id"] if head else None)
         ssid = catalog.write(
             _sig_table(table),
             _banded_sigs(delta, dedup_col, num_perm, ngram),

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions import h3core
 from ..functions import text as textf
+from ..sources.catalog import dataset_entry
 
 POINTS_SCHEMA = ("url string, warc_ts timestamp, lang string, "
                  "latitude double, longitude double")
@@ -110,25 +111,21 @@ def salted_points(pages: DataFrame, max_res: int = 9, parent_res: int = 1,
 
 
 def index_pages(catalog, pages: DataFrame, dataset="page_points",
-                max_res: int = 9, parent_res: int = 1, salt: int = 8,
-                register=True, lineage=None):
-    """full pipeline; returns (snapshot_id, row_count)."""
+                max_res: int = 9, parent_res: int = 1, salt: int = 8):
+    """full pipeline, committed with the point dataset's registry entry
+    in one snapshot; returns (snapshot_id, row_count)."""
+    entry = dataset_entry(
+        dataset, "H3-indexed geo anchors of the pages table",
+        key_columns={"latitude": "REAL", "longitude": "REAL"},
+        value_columns={"url": "VARCHAR", "lang": "VARCHAR"},
+        dataset_type="point")
     pts = salted_points(pages, max_res, parent_res, salt)
     sid = catalog.write(
         dataset, pts, mode="overwrite", partition_by=[f"p{parent_res}"],
-        lineage=dict(lineage or {}, stage="index_pages", max_res=max_res,
-                     parent_res=parent_res, salt=salt))
-    rows = catalog.read_manifest(dataset)["total_rows"]
-    if register:
-        try:
-            catalog.add_meta(
-                dataset, "H3-indexed geo anchors of the pages table",
-                key_columns={"latitude": "REAL", "longitude": "REAL"},
-                value_columns={"url": "VARCHAR", "lang": "VARCHAR"},
-                dataset_type="point")
-        except ValueError:
-            pass  # already registered (idempotent resume)
-    return sid, rows
+        lineage={"stage": "index_pages", "max_res": max_res,
+                 "parent_res": parent_res, "salt": salt},
+        dataset=entry)
+    return sid, catalog.read_manifest(dataset, sid)["total_rows"]
 
 
 def text_invariant_violations(pages: DataFrame) -> int:

@@ -73,12 +73,15 @@ def _radius_guard(radius_km, res, is_point_dataset):
 
 class DatasetQueries:
     """the query routes over one registered dataset, h3/h3_index or
-    point; `load` yields the dataset's DataFrame."""
+    point; `load` yields the dataset's DataFrame. The HEAD manifest is
+    read once: it holds the registry entry and plans every route's
+    files, so all of them read the same snapshot."""
 
     def __init__(self, catalog, dataset):
         self.catalog = catalog
         self.dataset = dataset
-        self.meta = catalog.get_ds_metadata(dataset)
+        self.man = catalog.registered_manifest(dataset)
+        self.meta = self.man["dataset"]
         self.interval = interval_of(self.meta["key_columns"])
         # the reference's projection re-selects latitude/longitude when they
         # also appear in value_columns (flood datasets do), emitting
@@ -90,19 +93,18 @@ class DatasetQueries:
         self.ds_type = self.meta["dataset_type"]
 
     def load(self):
-        return self.catalog.load(self.dataset)
+        return self.catalog.frame(self.man)
 
     def _timed(self, year, month, day, bbox=None):
         """the time-filtered DataFrame. With a query bbox
         (la_min, la_max, lo_min, lo_max) on a p{r}-partitioned dataset,
         the files are planned from the HEAD manifest first: only the
         partitions _partition_prune keeps are read, and the same IN
-        filter stays on the pruned DataFrame. One manifest read serves
-        both the planning and the load."""
-        man = self.catalog.read_manifest(self.dataset)
-        parts = None if bbox is None else self._partition_prune(man, *bbox)
-        df = _time_filter(self.catalog.frame(man, parts), self.interval,
-                          year, month, day)
+        filter stays on the pruned DataFrame."""
+        parts = None if bbox is None else self._partition_prune(self.man,
+                                                                *bbox)
+        df = _time_filter(self.catalog.frame(self.man, parts),
+                          self.interval, year, month, day)
         for col, vals in (parts or {}).items():
             df = df.filter(F.col(col).isin(sorted(vals)))
         return df

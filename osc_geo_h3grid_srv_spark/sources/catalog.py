@@ -21,7 +21,8 @@ No Iceberg jars exist in this environment (SURVEY.md SS0.2); the layout
 keeps Iceberg's semantics (snapshot isolation, manifests listing data
 files) so a real catalog can be swapped in where jars exist.
 
-Metadata registry parity (reference semantics):
+Metadata registry parity (reference semantics); a dataset's registry
+entry is the `dataset` field of its manifest, committed with its data:
 * dataset types: h3 / point / h3_index (metadata.py:21-25)
 * column-name charset [A-Za-z0-9_] (metadata.py:83-92,275-283)
 * scalar-only column types with alias canonicalization
@@ -122,8 +123,30 @@ def interval_of(key_columns) -> str:
     return "one_time"
 
 
+def dataset_entry(dataset_name, description, key_columns, value_columns,
+                  dataset_type):
+    """a validated registry entry for Catalog.write (metadata.py:45-184):
+    dataset_type, name charset, canonical scalar column types."""
+    if dataset_type not in VALID_DATASET_TYPES:
+        raise ValueError(
+            f"dataset_type {dataset_type!r} not in {VALID_DATASET_TYPES}")
+    validate_column_name(dataset_name)
+    key_columns = {k: canonical_type(v) for k, v in key_columns.items()}
+    value_columns = {k: canonical_type(v) for k, v in
+                     value_columns.items()}
+    for c in list(key_columns) + list(value_columns):
+        validate_column_name(c)
+    return {
+        "dataset_name": dataset_name,
+        "description": description,
+        "key_columns": key_columns,
+        "value_columns": value_columns,
+        "dataset_type": dataset_type,
+    }
+
+
 class Catalog:
-    """warehouse of snapshot tables + the dataset metadata registry."""
+    """warehouse of snapshot tables, each manifest with its registry entry."""
 
     def __init__(self, warehouse_dir: str, spark=None):
         self.root = warehouse_dir
@@ -158,18 +181,19 @@ class Catalog:
             return json.load(fh)
 
     def write(self, table, df, mode="overwrite", partition_by=None,
-              lineage=None, metrics=None):
+              lineage=None, metrics=None, dataset=None):
         """write a DataFrame as a new snapshot; returns snapshot id.
 
         mode=append: new snapshot = parent's files + new files (no rewrite).
+        dataset: a dataset_entry() recorded in this snapshot; None keeps
+        the parent's entry.
         Commit protocol: data to a staging dir -> manifest json ->
         atomic HEAD rename. A crash before HEAD update leaves the previous
         snapshot intact (resume-safe).
         """
         t0 = time.time()
-        tdir = self._tdir(table)
-        os.makedirs(os.path.join(tdir, "snapshots"), exist_ok=True)
-        staging = os.path.join(tdir, f"data-{uuid.uuid4().hex[:12]}")
+        staging = os.path.join(self._tdir(table),
+                               f"data-{uuid.uuid4().hex[:12]}")
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -178,17 +202,19 @@ class Catalog:
         parent = self.current_snapshot(table)
         schema = [{"name": f.name, "type": f.dataType.simpleString()}
                   for f in df.schema.fields]
-        if mode == "append" and parent is not None:
+        if parent is not None:
             pman = self.read_manifest(table, parent)
-            files = pman["files"] + files
-            schema = self._evolve_schema(table, pman["schema"], schema)
+            dataset = dataset or pman["dataset"]
+            if mode == "append":
+                files = pman["files"] + files
+                schema = self._evolve_schema(table, pman["schema"], schema)
         return self._commit(
             table, parent, mode, partition_by or [], schema, files,
             lineage or {}, dict(metrics or {}, commit_wall_clock_s=round(
-                time.time() - t0, 3)))
+                time.time() - t0, 3)), dataset)
 
     def _commit(self, table, parent, mode, partition_by, schema, files,
-                lineage, metrics):
+                lineage, metrics, dataset):
         """commit snapshot parent+1: manifest v{sid}.json written via tmp
         + os.replace, then the HEAD pointer flipped the same way (a crash
         between the two leaves the parent current). Returns the sid."""
@@ -205,8 +231,10 @@ class Catalog:
             "total_rows": sum(f["rows"] for f in files),
             "lineage": lineage,
             "metrics": metrics,
+            "dataset": dataset,
         }
         mpath = self._manifest_path(table, sid)
+        os.makedirs(os.path.dirname(mpath), exist_ok=True)
         tmp = mpath + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh, indent=1)
@@ -310,6 +338,15 @@ class Catalog:
         cols += [F.col(p) for p in man["partition_by"]
                  if p not in {c["name"] for c in schema}]
         return df.select(*cols)
+
+    def added_since(self, man, snapshot):
+        """frame() over the files of manifest `man` that snapshot
+        `snapshot` of its table lacks (all for None); None if none."""
+        old = set() if snapshot is None else {
+            f["path"] for f in self.read_manifest(man["table"],
+                                                  snapshot)["files"]}
+        added = [f for f in man["files"] if f["path"] not in old]
+        return self.frame(dict(man, files=added)) if added else None
 
     def _df_for_files(self, table, files, partition_by, schema):
         """DataFrame over `files`, read with the manifest `schema` as
@@ -419,7 +456,8 @@ class Catalog:
             man["schema"], files,
             {"stage": "compact", "inputs": {table: parent},
              "rewritten_files": len(rewrite), "new_files": len(new_files)},
-            {"commit_wall_clock_s": round(time.time() - t0, 3)})
+            {"commit_wall_clock_s": round(time.time() - t0, 3)},
+            man["dataset"])
 
     def tables(self):
         return sorted(
@@ -451,56 +489,46 @@ class Catalog:
 
     # -- dataset metadata registry (reference metadata.py semantics) --------
 
-    def _meta_path(self):
-        return os.path.join(self.root, "dataset_metadata.json")
-
-    def _read_meta(self):
-        try:
-            with open(self._meta_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return {}
-
     def add_meta(self, dataset_name, description, key_columns, value_columns,
                  dataset_type):
-        """register a dataset (metadata.py:45-184): validates names, types,
-        dataset_type; rejects duplicates."""
-        if dataset_type not in VALID_DATASET_TYPES:
-            raise ValueError(
-                f"dataset_type {dataset_type!r} not in {VALID_DATASET_TYPES}")
-        validate_column_name(dataset_name)
-        key_columns = {k: canonical_type(v) for k, v in key_columns.items()}
-        value_columns = {k: canonical_type(v) for k, v in
-                         value_columns.items()}
-        for c in list(key_columns) + list(value_columns):
-            validate_column_name(c)
-        meta = self._read_meta()
-        if dataset_name in meta:
+        """register a dataset ahead of its load (metadata.py:45-184): a
+        snapshot of the parent's files (none for a new table) + the entry;
+        rejects a table that has one. Returns the snapshot id."""
+        entry = dataset_entry(dataset_name, description, key_columns,
+                              value_columns, dataset_type)
+        parent = self.current_snapshot(dataset_name)
+        man = {"partition_by": [], "schema": [], "files": [],
+               "dataset": None}
+        if parent is not None:
+            man = self.read_manifest(dataset_name, parent)
+        if man["dataset"] is not None:
             raise ValueError(f"dataset {dataset_name!r} already registered")
-        meta[dataset_name] = {
-            "dataset_name": dataset_name,
-            "description": description,
-            "key_columns": key_columns,
-            "value_columns": value_columns,
-            "dataset_type": dataset_type,
-        }
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh, indent=1)
-        os.replace(tmp, self._meta_path())
+        return self._commit(
+            dataset_name, parent, "register", man["partition_by"],
+            man["schema"], man["files"], {"stage": "add_meta"}, {}, entry)
+
+    def registered_manifest(self, dataset_name):
+        """the HEAD manifest of a registered dataset, its entry under
+        "dataset"; raises if unregistered (geomesh.py:188-191)."""
+        try:
+            man = self.read_manifest(dataset_name) if _NAME_RE.match(
+                dataset_name) else {}
+        except KeyError:
+            man = {}
+        if man.get("dataset") is None:
+            raise KeyError(
+                f"dataset {dataset_name!r} not registered in metadata")
+        return man
 
     def get_ds_metadata(self, dataset_name):
         """metadata row; raises if unregistered (geomesh.py:188-191)."""
-        meta = self._read_meta()
-        if dataset_name not in meta:
-            raise KeyError(
-                f"dataset {dataset_name!r} not registered in metadata")
-        return meta[dataset_name]
+        return self.registered_manifest(dataset_name)["dataset"]
 
     def show_meta(self):
         """all metadata rows as a DataFrame (showmeta endpoint,
-        geomesh_router.py:242-248)."""
-        rows = list(self._read_meta().values())
+        geomesh_router.py:242-248), one per registered table."""
+        rows = [e for e in (self.read_manifest(t)["dataset"]
+                            for t in self.tables()) if e is not None]
         from pyspark.sql import Row
         if not rows:
             return self.spark.createDataFrame(

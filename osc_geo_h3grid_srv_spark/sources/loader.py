@@ -17,9 +17,9 @@ Semantics implemented (reference docs README-geospatial.md:60-110 and the
   cli_geospatial.py:36-39) each data column onto the cell centroids,
   per time slice (`interval` -> year/month/day key columns),
 * write one catalog table per resolution, `{dataset}_{res}`, columns
-  `h3_cell, latitude, longitude, <data cols...>, <time keys...>`, and
-  register each in the metadata registry (mode `create` rejects
-  existing names; `replace` overwrites).
+  `h3_cell, latitude, longitude, <data cols...>, <time keys...>`,
+  each registered in the snapshot that writes it (mode `create` rejects
+  existing tables; `replace` overwrites data and registry entry).
 
 Scale design: the interpolation is the banded-bucket kNN join of
 operators/interpolate.py (never a cross join) run with an EXPANDING
@@ -39,6 +39,8 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.geo import PackedPolygons, haversine_km
 
 _TYPE_MAP = {
     "float": "double", "double": "double", "real": "double",
@@ -131,15 +133,6 @@ class LoaderConfig:
         return list(_INTERVALS[self.interval])
 
 
-def _haversine_km(lat1, lng1, lat2, lng2):
-    r = 6371.0088
-    p1, p2 = math.radians(lat1), math.radians(lat2)
-    dl = math.radians(lng2 - lng1)
-    h = (math.sin((p2 - p1) / 2) ** 2
-         + math.cos(p1) * math.cos(p2) * math.sin(dl / 2) ** 2)
-    return 2 * r * math.asin(math.sqrt(h))
-
-
 def _grid_df(spark, packed, res):
     """region cells at `res` with centroids (reference buffer rule)."""
     import pandas as pd
@@ -192,10 +185,10 @@ def run_csv_loader(engine, cfg: LoaderConfig) -> dict:
     keys = cfg.time_keys()
 
     if cfg.mode == "create":
-        existing = set(engine.catalog._read_meta())
         clashes = [f"{cfg.dataset_name}_{r}"
                    for r in range(cfg.max_resolution + 1)
-                   if f"{cfg.dataset_name}_{r}" in existing]
+                   if engine.catalog.current_snapshot(
+                       f"{cfg.dataset_name}_{r}") is not None]
         if clashes:
             raise ValueError(
                 f"mode=create but dataset tables exist: {clashes}; use "
@@ -241,14 +234,13 @@ def run_csv_loader(engine, cfg: LoaderConfig) -> dict:
                     F.min("longitude"), F.max("longitude")).collect()[0]
         la0, la1, lo0, lo1 = (b[0] or 0.0), (b[1] or 0.0), \
             (b[2] or 0.0), (b[3] or 0.0)
-        from ..functions.geo import PackedPolygons
         ring = [(la0, lo0), (la0, lo1), (la1, lo1), (la1, lo0)]
         packed = PackedPolygons.from_latlng_rings([[ring]], ["bbox"])
 
-    diag = max(_haversine_km(la0, lo0, la1, lo1), 1.0) * 1.05
+    diag = max(haversine_km(la0, lo0, la1, lo1), 1.0) * 1.05
     area_km2 = max(
-        _haversine_km(la0, lo0, la1, lo0)
-        * _haversine_km(la0, lo0, la0, lo1), 1.0)
+        haversine_km(la0, lo0, la1, lo0)
+        * haversine_km(la0, lo0, la0, lo1), 1.0)
     # density-derived initial radius: ~ k points expected per disc
     d0 = max(5.0, 2.0 * math.sqrt(
         area_km2 * cfg.num_neighbors / max(n_pts, 1)))

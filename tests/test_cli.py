@@ -98,6 +98,33 @@ def test_cli_showmeta(engine, warehouse, spark):
     assert "flood_1000y" in out
 
 
+def test_cli_addmeta_then_load(spark, tmp_path):
+    """reference order: addmeta registers first, a load then writes the
+    data; showmeta lists the dataset once and a second addmeta is
+    refused."""
+    from osc_geo_h3grid_srv_spark.engine import GeoMeshEngine
+    wh = str(tmp_path / "wh")
+    addmeta = ["--database-dir", wh, "addmeta", "--dataset_name", "cells",
+               "--description", "cells registered before load",
+               "--key_columns", '{"h3_cell": "VARCHAR"}',
+               "--value_columns", '{"v": "DOUBLE"}',
+               "--dataset_type", "h3"]
+    assert "Created Metadata Entry for cells" in cli_geospatial.execute(
+        addmeta, spark=spark)
+    GeoMeshEngine(spark, wh).load_dataset_from_df(
+        "cells", spark.createDataFrame([("8a1fb46622dffff", 1.0)],
+                                       "h3_cell string, v double"),
+        dataset_type="h3", key_columns={"h3_cell": "VARCHAR"},
+        value_columns={"v": "DOUBLE"},
+        description="cells registered before load")
+    meta = json.loads(cli_geospatial.execute(
+        ["--database-dir", wh, "showmeta"], spark=spark))
+    names = [r[meta["columns"].index("dataset_name")] for r in meta["data"]]
+    assert names == ["cells"]
+    with pytest.raises(ValueError, match="already registered"):
+        cli_geospatial.execute(addmeta, spark=spark)
+
+
 def test_cli_show_radius(engine, warehouse, spark):
     """show --latitude/--longitude/--radius drives the radius query."""
     out = cli_geospatial.execute([

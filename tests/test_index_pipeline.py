@@ -384,17 +384,30 @@ def test_mid_ocean_radius_is_empty(pp_prune):
 def test_point_routes_read_manifest_and_metadata_once(engine, pp_prune,
                                                       monkeypatch):
     """building a point-route DataFrame reads the HEAD manifest once
-    (planning and load share it) and dataset_metadata.json once."""
+    (registry entry, planning and load share it) and no other catalog
+    file."""
+    import builtins
+
     from osc_geo_h3grid_srv_spark.functions import geo
     from osc_geo_h3grid_srv_spark.sources.catalog import Catalog
-    calls = {"read_manifest": 0, "_read_meta": 0}
-    for name in calls:
-        orig = getattr(Catalog, name)
+    cat = engine.catalog
+    head_files = [cat._head_path("pp_prune"), cat._manifest_path(
+        "pp_prune", cat.current_snapshot("pp_prune"))]
+    calls = {"read_manifest": 0}
+    orig = Catalog.read_manifest
 
-        def counted(self, *a, _orig=orig, _name=name, **kw):
-            calls[_name] += 1
-            return _orig(self, *a, **kw)
-        monkeypatch.setattr(Catalog, name, counted)
+    def counted(self, *a, **kw):
+        calls["read_manifest"] += 1
+        return orig(self, *a, **kw)
+    monkeypatch.setattr(Catalog, "read_manifest", counted)
+    opened = []
+    real_open = builtins.open
+
+    def spy_open(path, *a, **kw):
+        if str(path).startswith(cat.root):
+            opened.append(str(path))
+        return real_open(path, *a, **kw)
+    monkeypatch.setattr(builtins, "open", spy_open)
     cell = h3core.cell_to_string(h3core.latlng_to_cell(
         np.array([52.52]), np.array([13.40]), 7))[0]
     poly = geo.PackedPolygons.from_latlng_rings(
@@ -404,10 +417,12 @@ def test_point_routes_read_manifest_and_metadata_once(engine, pp_prune,
                   lambda: engine.cell_radius("pp_prune", cell, 20.0),
                   lambda: engine.cell_point("pp_prune", cell),
                   lambda: engine.shapefile_get("pp_prune", poly, "box")):
-        for name in calls:
-            calls[name] = 0
+        calls["read_manifest"] = 0
+        opened.clear()
         build()
-        assert calls == {"read_manifest": 1, "_read_meta": 1}
+        assert calls == {"read_manifest": 1}
+        # the HEAD pointer and the one manifest it names
+        assert opened == head_files
 
 
 def test_catalog_reads_plan_without_spark_jobs(spark, engine, pp_prune,

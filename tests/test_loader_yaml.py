@@ -176,6 +176,24 @@ def test_mode_create_rejects_existing(loaded, tmp_path):
     assert 0 in t
 
 
+def test_replace_updates_registered_interval(engine, tmp_path):
+    """mode: replace with another interval re-registers the tables, so
+    queries take the new interval's time keys."""
+    csv_path, _ = _fixture_csv(tmp_path)
+    base = str(tmp_path / "trig3")
+    shpio.write_shapefile([[(_TRI, False)]], base, names=["Trigland"])
+    t = engine.load_from_config(
+        _yaml(tmp_path, csv_path, base, "gissyr", max_res=2))
+    assert engine.catalog.ds_interval(t[2]) == "monthly"
+    engine.load_from_config(
+        _yaml(tmp_path, csv_path, base, "gissyr", max_res=2,
+              mode="replace").replace("interval: monthly",
+                                      "interval: yearly"))
+    assert engine.catalog.ds_interval(t[2]) == "yearly"
+    assert engine.radius(t[2], 50.0, 10.0, 200.0, resolution=2,
+                         year=2022).count() > 0
+
+
 def test_config_validation():
     with pytest.raises(ValueError, match="loader_type"):
         LoaderConfig.from_dict({
