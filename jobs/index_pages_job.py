@@ -74,10 +74,8 @@ def main():
     # catalog, so we commit the pages themselves first to give the stage
     # a resumable input anchor)
     src = args.pages_path or f"synthetic:{args.n_pages}"
-    try:
-        prev = catalog.read_manifest("pages_raw")["lineage"].get("source")
-    except (KeyError, FileNotFoundError):
-        prev = None
+    raw = catalog.head("pages_raw")
+    prev = raw["lineage"].get("source") if raw else None
     if prev != src:  # idempotent ingest: same source -> keep snapshot
         catalog.write("pages_raw", pages, mode="overwrite",
                       lineage={"stage": "ingest_pages", "source": src})

@@ -38,9 +38,8 @@ class Pipeline:
 
     def _stage_done(self, stage):
         """output exists and was built from the current input snapshots."""
-        try:
-            man = self.catalog.read_manifest(stage.output)
-        except (KeyError, FileNotFoundError):
+        man = self.catalog.head(stage.output)
+        if man is None:
             return False
         lin = man.get("lineage", {})
         return (lin.get("stage") == stage.name

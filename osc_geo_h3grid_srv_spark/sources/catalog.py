@@ -180,6 +180,12 @@ class Catalog:
         with open(self._manifest_path(table, sid)) as fh:
             return json.load(fh)
 
+    def head(self, table):
+        """the HEAD manifest, or None when `table` has no HEAD; a HEAD
+        naming a missing manifest raises FileNotFoundError."""
+        sid = self.current_snapshot(table)
+        return None if sid is None else self.read_manifest(table, sid)
+
     def write(self, table, df, mode="overwrite", partition_by=None,
               lineage=None, metrics=None, dataset=None):
         """write a DataFrame as a new snapshot; returns snapshot id.
@@ -510,12 +516,9 @@ class Catalog:
     def registered_manifest(self, dataset_name):
         """the HEAD manifest of a registered dataset, its entry under
         "dataset"; raises if unregistered (geomesh.py:188-191)."""
-        try:
-            man = self.read_manifest(dataset_name) if _NAME_RE.match(
-                dataset_name) else {}
-        except KeyError:
-            man = {}
-        if man.get("dataset") is None:
+        man = self.head(dataset_name) if _NAME_RE.match(dataset_name) \
+            else None
+        if man is None or man["dataset"] is None:
             raise KeyError(
                 f"dataset {dataset_name!r} not registered in metadata")
         return man

@@ -106,6 +106,20 @@ def test_write_without_entry_keeps_the_parents(eng, spark):
     assert [r.dataset_name for r in cat.show_meta().collect()] == ["pre"]
 
 
+def test_registered_without_data_refuses_queries(eng, spark):
+    eng.catalog.add_meta("pre", "registered before its load", KEYS,
+                         {"temp": "DOUBLE"}, "h3")
+    with pytest.raises(ValueError, match="'pre'.*holds no data yet"):
+        eng.radius("pre", 50.0, 10.0, 200.0, resolution=3, year=2022,
+                   month=12)
+    eng.load_dataset_from_df(
+        "pre", _cell_rows(spark, "temp"), dataset_type="h3",
+        key_columns=KEYS, value_columns={"temp": "DOUBLE"})
+    rows = eng.radius("pre", 50.0, 10.0, 200.0, resolution=3, year=2022,
+                      month=12).collect()
+    assert [r["temp"] for r in rows] == [1.5]
+
+
 def test_unregistered_names_raise(eng):
     cat = eng.catalog
     for name in ("nothing_here", "../wh", ""):

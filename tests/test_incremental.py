@@ -1,12 +1,20 @@
 """Incremental crawl ingest (operators/incremental.py): batch-over-
 batch exact dedup against the companion hash table, idempotent
-re-ingest, and crash reconciliation between the data and hash commits.
+re-ingest, and crash reconciliation between the data and hash commits;
+the companion-index protocol cases run for the near-dup ingest too.
 """
 
+import glob
+import hashlib
+import os
+
 import pandas as pd
+import pytest
 
 from osc_geo_h3grid_srv_spark.operators.incremental import (
-    incremental_ingest)
+    _hash_table, incremental_ingest)
+from osc_geo_h3grid_srv_spark.operators.incremental_near import (
+    _sig_table, incremental_near_ingest)
 from osc_geo_h3grid_srv_spark.sources.catalog import Catalog
 
 
@@ -94,3 +102,45 @@ def test_compaction_does_not_duplicate_hashes(spark, tmp_path):
     assert r["rows_appended"] == 1
     assert cat.load(ht).count() == 4
     assert cat.load(ht).distinct().count() == 4
+
+
+@pytest.mark.parametrize("ingest,companion,key", [
+    (incremental_ingest, _hash_table, "content_hash"),
+    (incremental_near_ingest, _sig_table, "doc_key")])
+def test_torn_first_ingest_heals(spark, tmp_path, ingest, companion, key):
+    """the first ingest's data commit lands and its index commit never
+    does: the next ingest indexes every data file in an overwrite
+    commit, then dedups its batch against it."""
+    cat = Catalog(str(tmp_path / "wh"), spark)
+    texts = [" ".join(f"w{i}x{j}" for j in range(30)) for i in range(3)]
+    cat.write("pages_raw", _pages(spark, [
+        ("u1", "2024-01-01 10:00", texts[0]),
+        ("u2", "2024-01-01 10:01", texts[1])]),
+        lineage={"stage": "torn", "batch_source": "c1"})
+    ct = companion("pages_raw")
+    assert cat.current_snapshot(ct) is None
+    r = ingest(cat, _pages(spark, [
+        ("u3", "2024-01-02 09:00", texts[1]),   # dup only via healing
+        ("u4", "2024-01-02 09:01", texts[2])]), batch_source="c2")
+    assert r["rows_appended"] == 1
+    healed = cat.read_manifest(ct, 1)
+    assert healed["mode"] == "overwrite"
+    assert healed["lineage"]["covers_snapshot"] == 1
+    md5 = [hashlib.md5(t.encode()).hexdigest() for t in texts]
+    assert {x[key] for x in cat.load(ct, 1).collect()} == set(md5[:2])
+    assert sorted(x["text"] for x in cat.load("pages_raw").collect()) \
+        == sorted(texts)
+    assert {x[key] for x in cat.load(ct).collect()} == set(md5)
+
+
+def test_missing_head_manifest_raises_before_staging(spark, tmp_path):
+    cat = Catalog(str(tmp_path / "wh"), spark)
+    incremental_ingest(cat, _pages(spark, [
+        ("u1", "2024-01-01 10:00", "alpha")]), batch_source="c1")
+    tdir = str(tmp_path / "wh" / "pages_raw")
+    os.remove(os.path.join(tdir, "snapshots", "v000001.json"))
+    staged = sorted(glob.glob(os.path.join(tdir, "data-*")))
+    with pytest.raises(FileNotFoundError):
+        incremental_ingest(cat, _pages(spark, [
+            ("u2", "2024-01-02 09:00", "beta")]), batch_source="c2")
+    assert sorted(glob.glob(os.path.join(tdir, "data-*"))) == staged

@@ -74,14 +74,15 @@ def test_continental_scale_driver_refuses_distributed_works(spark):
     assert not missing
 
 
-def test_enumerate_region_cells_auto_switch(spark):
+def test_enumerate_region_cells_auto_switch(spark, monkeypatch):
     pp = geo.PackedPolygons.from_latlng_rings([[GERMANY]], ["germany"])
     # small: driver path; forced distributed must agree
     drv = {r["cell"] for r in
            enumerate_region_cells(spark, pp, resolution=5).collect()}
-    dist = {r["cell"] for r in
-            enumerate_region_cells(spark, pp, resolution=5,
-                                   distributed=True).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(pf, "DRIVER_SAMPLE_LIMIT", 0)
+        dist = {r["cell"] for r in
+                enumerate_region_cells(spark, pp, resolution=5).collect()}
     assert drv == dist and drv
     # continent-scale at res 8 auto-routes to the distributed path
     ppe = geo.PackedPolygons.from_latlng_rings([[EUROPE]], ["europe"])

@@ -72,6 +72,35 @@ def test_stream_ingest_exactly_once(spark, tmp_path, catalog):
         == man2["snapshot_id"]
 
 
+def test_stream_replay_after_catalog_commit_is_skipped(spark, tmp_path,
+                                                      catalog):
+    """a run that dies after the catalog commit but before Spark's
+    commit log entry replays that micro-batch on restart; the replay
+    must not append its rows a second time."""
+    from osc_geo_h3grid_srv_spark.streaming.ingest import stream_index_pages
+
+    landing = str(tmp_path / "landing")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(landing)
+    _land(spark, landing, 0, 300, "batch1")
+    q = stream_index_pages(spark, catalog, landing, ckpt,
+                           dataset="pts_stream", max_res=7)
+    q.awaitTermination(300)
+    man1 = catalog.read_manifest("pts_stream")
+    assert man1["lineage"]["batch_id"] == 0 and man1["total_rows"] > 0
+
+    # the crash: batch 0 is in the catalog, not in the commit log
+    os.remove(os.path.join(ckpt, "commits", "0"))
+    os.remove(os.path.join(ckpt, "commits", ".0.crc"))
+    q = stream_index_pages(spark, catalog, landing, ckpt,
+                           dataset="pts_stream", max_res=7)
+    q.awaitTermination(300)
+    man2 = catalog.read_manifest("pts_stream")
+    assert man2["snapshot_id"] == man1["snapshot_id"]
+    assert man2["total_rows"] == man1["total_rows"]
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))
+
+
 def test_stateful_cell_totals_checkpoint_recovery(spark, tmp_path):
     """applyInPandasWithState running per-parent counters: totals equal
     batch ground truth, and a RESTARTED query resumes its state from the
