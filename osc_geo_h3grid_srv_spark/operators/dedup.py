@@ -97,6 +97,28 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     return out
 
 
+def lsh_band_hashes(sig: str, num_perm: int, bands: int):
+    """the banded-LSH keys of the MinHash signature column `sig`,
+    exploded as "bb": one (band, bh) struct per band, bh = xxhash64 of
+    the band's num_perm/bands signature positions joined by ","."""
+    rows_per_band = num_perm // bands
+    return F.explode(F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(F.concat_ws(
+                ",", *[F.col(sig)[b * rows_per_band + r].cast("string")
+                       for r in range(rows_per_band)])).alias("bh"))
+        for b in range(bands)])).alias("bb")
+
+
+def minhash_estimate(sig_a: str, sig_b: str, num_perm: int):
+    """the MinHash Jaccard estimate of two signature columns: the
+    fraction of equal signature positions."""
+    return F.expr(
+        f"aggregate(zip_with({sig_a}, {sig_b}, (x, y) -> if(x = y, 1, 0)), "
+        "0, (acc, v) -> acc + v)") / F.lit(float(num_perm))
+
+
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
                       num_perm: int = 32, bands: int = 8,
                       threshold: float = 0.7, ngram: int = 3) -> DataFrame:
@@ -110,7 +132,6 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     bounded by AQE skew-join splitting; at 10^12 docs add a bucket-size
     cap + salt.
     """
-    rows_per_band = num_perm // bands
     mh = make_minhash(num_perm, ngram)
     # localCheckpoint: the Arrow signature UDF runs ONCE (both join sides
     # read the materialized blocks), and unlike .cache() the blocks are
@@ -120,16 +141,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     # tolerant).
     sig = df.select(id_col, mh(F.col(text_col)).alias("sig")) \
         .localCheckpoint(eager=False)
-    banded = sig.select(
-        id_col, "sig",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(F.concat_ws(
-                    ",", *[F.col("sig")[b * rows_per_band + r].cast("string")
-                           for r in range(rows_per_band)])).alias("bh"))
-            for b in range(bands)])).alias("bb"))
-    banded = banded.select(id_col, "sig", "bb.band", "bb.bh")
+    banded = sig.select(id_col, "sig",
+                        lsh_band_hashes("sig", num_perm, bands)) \
+        .select(id_col, "sig", "bb.band", "bb.bh")
     a = banded.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"),
                       "band", "bh")
     b = banded.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"),
@@ -138,9 +152,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     # band it collides in, so computing est + threshold BEFORE the dedup
     # means the distinct shuffle carries (id_a, id_b, est) — not two full
     # num_perm x 8B signatures per band hit (VERDICT r01 what's-wrong #4)
-    est = F.expr(
-        "aggregate(zip_with(sig_a, sig_b, (x, y) -> if(x = y, 1, 0)), "
-        "0, (acc, v) -> acc + v)") / F.lit(float(num_perm))
+    est = minhash_estimate("sig_a", "sig_b", num_perm)
     out = (a.join(b, ["band", "bh"])
            .filter(F.col("id_a") < F.col("id_b"))
            .withColumn("est_jaccard", F.round(est, 6))

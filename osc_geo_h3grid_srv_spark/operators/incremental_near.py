@@ -42,34 +42,24 @@ def _banded_sigs(df: DataFrame) -> DataFrame:
     """(doc_key, sig, band, bh) — doc_key is the content md5 (content-
     addressed: re-ingest of identical text maps to the same key), one
     row per band so the index probe is a narrow equi-join."""
-    from .dedup import make_minhash
-    rows_per_band = NUM_PERM // BANDS
+    from .dedup import lsh_band_hashes, make_minhash
     mh = make_minhash(NUM_PERM, NGRAM)
     sig = df.select(F.md5(F.col(DEDUP_COL)).alias("doc_key"),
                     mh(F.col(DEDUP_COL)).alias("sig")) \
         .dropDuplicates(["doc_key"])
-    return sig.select(
-        "doc_key", "sig",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(F.concat_ws(
-                    ",", *[F.col("sig")[b * rows_per_band + r]
-                           .cast("string")
-                           for r in range(rows_per_band)])).alias("bh"))
-            for b in range(BANDS)])).alias("bb")) \
+    return sig.select("doc_key", "sig",
+                      lsh_band_hashes("sig", NUM_PERM, BANDS)) \
         .select("doc_key", "sig", "bb.band", "bb.bh")
 
 
 def _drop_near(batch: DataFrame, index, threshold: float) -> DataFrame:
     """the rows of `batch` (one per doc_key) that near-duplicate neither
     the index nor an earlier (warc_ts, url) row of the batch."""
+    from .dedup import minhash_estimate
     bsigs = _banded_sigs(batch) \
         .localCheckpoint(eager=False)  # Arrow signature UDF runs once
 
-    est = (F.expr("size(filter(zip_with(sig, sig_x, "
-                  "(x, y) -> x = y), b -> b))")
-           / F.lit(float(NUM_PERM)))
+    est = minhash_estimate("sig", "sig_x", NUM_PERM)
     drops = None
     if index is not None:
         probe = bsigs.join(

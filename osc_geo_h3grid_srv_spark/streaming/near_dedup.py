@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.spark_udfs import make_minhash
+from ..operators.dedup import lsh_band_hashes
 from ..sources.pages import PAGES_SCHEMA
 
 CLAIM_SCHEMA = ("url string, warc_ts timestamp, band int, "
@@ -116,21 +117,12 @@ def stream_near_dedup(spark, landing_dir: str, checkpoint_dir: str,
     """landing pages -> minhash -> banded bucket claims (stateful) ->
     per-doc dup decision; out_sink(decisions_df, batch_id) gets one row
     per doc per micro-batch. Returns the started query."""
-    rows_per_band = num_perm // bands
     mh = make_minhash(num_perm, ngram)
     pages = (spark.readStream.schema(PAGES_SCHEMA)
              .option("maxFilesPerTrigger", 64).parquet(landing_dir))
     sig = pages.select("url", ts_col, mh(F.col("text")).alias("sig"))
     banded = sig.select(
-        "url", ts_col, "sig",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(F.concat_ws(
-                    ",", *[F.col("sig")[b * rows_per_band + r]
-                           .cast("string")
-                           for r in range(rows_per_band)])).alias("bh"))
-            for b in range(bands)])).alias("bb")
+        "url", ts_col, "sig", lsh_band_hashes("sig", num_perm, bands)
     ).select("url", ts_col, "sig", "bb.band", "bb.bh")
     claims = (banded.withWatermark(ts_col, watermark)
               .groupBy("band", "bh")

@@ -1,27 +1,38 @@
 """The bench protocol without Spark: bench.py's fixed rep loop, host
-sizing and session shape, and tools/bench_scaling.py's host-sized N -> 4N
-ladder (levels, efficiency from medians, output identity over every
-rep). Importing both modules here also catches an import of a module
-that no longer exists.
+sizing and session shape, and its host-sized N -> 4N ladder (levels,
+efficiency from medians, output identity over every rep, when the N
+level's child is launched). Importing bench here also catches an import
+of a module that no longer exists.
 """
 
-import importlib.util
 import os
 
 import pytest
 
 import bench
 
-_SCALING = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "tools", "bench_scaling.py")
+
+class Built(Exception):
+    pass
 
 
-@pytest.fixture(scope="module")
-def scaling():
-    spec = importlib.util.spec_from_file_location("bench_scaling", _SCALING)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+@pytest.fixture
+def shapes(monkeypatch):
+    """make_spark records the shape it is asked for and stops before any
+    JVM or data; the N level's launcher records its cores instead of
+    starting a process."""
+    from osc_geo_h3grid_srv_spark import engine
+
+    asked = {"make_spark": [], "spawn": []}
+
+    def make_spark(**kw):
+        asked["make_spark"].append(kw)
+        raise Built
+
+    monkeypatch.setattr(engine, "make_spark", make_spark)
+    monkeypatch.setattr(bench, "_spawn_level",
+                        lambda cores: asked["spawn"].append(cores))
+    return asked
 
 
 def test_bench_is_sized_from_the_host():
@@ -37,53 +48,58 @@ def test_time_reps_runs_fixed_reps():
     assert outs == [1, 2, 3]
 
 
-def test_bench_and_ladder_share_one_session_shape(scaling, monkeypatch):
-    from osc_geo_h3grid_srv_spark import engine
-
-    class Built(Exception):
-        pass
-
-    shapes = []
-
-    def make_spark(**kw):
-        shapes.append(kw)
-        raise Built  # stop before any JVM or data
-
-    monkeypatch.setattr(engine, "make_spark", make_spark)
+def test_bench_and_ladder_share_one_session_shape(shapes, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_ONLY", raising=False)
     monkeypatch.setattr(bench, "CPUS", 4)
-    for start in (bench.main, lambda: scaling.run_level(4, 10)):
+    for start in (bench.main, lambda: bench.run_level(4)):
         with pytest.raises(Built):
             start()
-    assert len(shapes) == 2 and shapes[0] == shapes[1]
-    assert shapes[0]["cores"] == 4
-    assert shapes[0]["shuffle_partitions"] == 32
-    assert shapes[0]["extra_conf"]["spark.driver.memory"] == \
+    assert shapes["spawn"] == [1]  # the N level, before bench's session
+    made = shapes["make_spark"]
+    assert len(made) == 2 and made[0] == made[1]
+    assert made[0]["cores"] == 4
+    assert made[0]["shuffle_partitions"] == bench.HOST.shuffle_partitions
+    assert made[0]["extra_conf"]["spark.driver.memory"] == \
         f"{bench.HOST.driver_memory_mb}m"
 
 
-@pytest.mark.parametrize("cores,levels", [(4, (1, 4)), (5, (1, 4)),
+def test_subset_run_launches_no_child(shapes, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_ONLY", "h3_cell_counts")
+    monkeypatch.setattr(bench, "CPUS", 4)
+    with pytest.raises(Built):
+        bench.main()
+    assert shapes["spawn"] == [] and len(shapes["make_spark"]) == 1
+
+
+@pytest.mark.parametrize("cores,levels", [(4, (1, 4)), (8, (2, 8)),
                                           (32, (8, 32))])
-def test_ladder_levels_from_cores(scaling, cores, levels):
-    assert scaling.ladder_levels(cores) == levels
+def test_ladder_levels_from_cores(cores, levels):
+    assert bench.ladder_levels(cores) == levels
 
 
-def test_ladder_refuses_below_four_cores(scaling):
-    with pytest.raises(SystemExit, match="at least 4 cores"):
-        scaling.ladder_levels(3)
+@pytest.mark.parametrize("cores", [3, 5])
+def test_no_ladder_pair_off_a_multiple_of_four(cores, shapes, monkeypatch):
+    reason = bench.ladder_levels(cores)
+    assert isinstance(reason, str) and "multiple of 4" in reason
+    monkeypatch.delenv("SPARK_GRAFT_ONLY", raising=False)
+    monkeypatch.setattr(bench, "CPUS", cores)
+    with pytest.raises(Built):  # bench still starts its own session
+        bench.main()
+    assert shapes["spawn"] == [] and len(shapes["make_spark"]) == 1
 
 
-def test_efficiency_from_medians(scaling):
+def test_efficiency_from_medians():
     # medians 11 and 40: a fast outlier rep at either level moves nothing
-    assert scaling.efficiency([10.0, 12.0, 11.0], [30.0, 40.0, 90.0]) \
+    assert bench.efficiency([10.0, 12.0, 11.0], [30.0, 40.0, 90.0]) \
         == pytest.approx(40.0 / 44.0)
 
 
-def test_identical_output_checks_every_rep(scaling):
+def test_identical_output_checks_every_rep():
     same = [{"outputs": [[7, 3], [7, 3], [7, 3]]},
             {"outputs": [[7, 3], [7, 3], [7, 3]]}]
-    assert scaling.identical_output(same)
+    assert bench.identical_output(same)
     for lv, rep in ((0, 0), (0, 1), (1, 1), (1, 2)):
         levels = [{"outputs": [list(o) for o in x["outputs"]]}
                   for x in same]
         levels[lv]["outputs"][rep] = [7, 4]
-        assert not scaling.identical_output(levels), (lv, rep)
+        assert not bench.identical_output(levels), (lv, rep)
