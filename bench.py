@@ -42,7 +42,8 @@ import sys
 import time
 from concurrent.futures import ProcessPoolExecutor
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from perfbench.harness import HostShape  # noqa: E402
 
@@ -105,7 +106,14 @@ def ladder_report(levels):
 def session(cores):
     """the one bench session shape: local[cores], the host's shuffle
     partitions (perfbench's rule) and driver memory. Both levels of the
-    N -> 4N ladder run in it."""
+    N -> 4N ladder run in it.
+
+    The repo root goes first on PYTHONPATH before the JVM starts: Spark's
+    Python workers import the package from there, not from this
+    process's sys.path, wherever bench.py was started from."""
+    path = os.environ.get("PYTHONPATH", "")
+    if path.split(os.pathsep)[0] != ROOT:
+        os.environ["PYTHONPATH"] = ROOT + (os.pathsep + path if path else "")
     from osc_geo_h3grid_srv_spark.engine import make_spark
     return make_spark(cores=cores, shuffle_partitions=HOST.shuffle_partitions,
                       extra_conf={"spark.ui.enabled": "false",

@@ -13,6 +13,8 @@ Every handler returns {"columns": [...], "data": [[...], ...]}.
 
 from __future__ import annotations
 
+import pandas as pd
+
 from .cli.common import df_payload
 
 _MISSING = object()
@@ -176,7 +178,9 @@ class GeoMeshService:
 
     def _filter_assets(self, _dataset, body):
         """POST /api/geomesh/filter: body = {"assets": <parquet path or
-        list of LocatedAsset dicts>, "datasets": [DatasetArg dicts]}."""
+        list of LocatedAsset dicts>, "datasets": [DatasetArg dicts]}.
+        Listed assets are already on the driver, so they go to the
+        correlator as a pandas frame and get their cells there."""
         specs = [d if isinstance(d, DatasetArg) else DatasetArg(**d)
                  for d in body["datasets"]]
         spec_dicts = [
@@ -190,9 +194,10 @@ class GeoMeshService:
         else:
             rows = [LocatedAsset(**a) if not isinstance(a, LocatedAsset)
                     else a for a in assets]
-            adf = self.engine.spark.createDataFrame(
-                [(r.id, r.lat, r.long) for r in rows],
-                "id string, lat double, long double")
+            adf = pd.DataFrame({
+                "id": pd.Series([r.id for r in rows], dtype=object),
+                "lat": pd.Series([r.lat for r in rows], dtype="float64"),
+                "long": pd.Series([r.long for r in rows], dtype="float64")})
         return df_payload(self.engine.correlate(adf, spec_dicts))
 
     def _showmeta(self, _dataset, _body):

@@ -21,7 +21,15 @@ from .sources.catalog import Catalog, dataset_entry
 def make_spark(app="osc-geo-h3grid-spark", cores=None, shuffle_partitions=32,
                extra_conf=None):
     """engine-tuned local session: AQE on (skew joins, partition
-    coalescing), Arrow on (pandas UDF transport)."""
+    coalescing), Arrow on (pandas UDF transport), no call-site capture.
+
+    PySpark wraps every DataFrame and Column method so that each call
+    walks the Python stack and pushes its file:line to the JVM; a
+    serving request builds a few dozen Columns, and that capture was
+    most of its planning time (one `F.col(x).cast(t).alias(x)`: 35 py4j
+    round trips with it, 5 without). With it off, analysis and ANSI
+    errors lose their Python "DataFrame context" lines; the error class
+    and message are unchanged."""
     master = f"local[{cores}]" if cores else "local[*]"
     b = (SparkSession.builder.appName(app).master(master)
          .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -42,6 +50,7 @@ def make_spark(app="osc-geo-h3grid-spark", cores=None, shuffle_partitions=32,
          .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
          .config("spark.driver.memory", "8g")
          .config("spark.sql.session.timeZone", "UTC"))
     for k, v in (extra_conf or {}).items():

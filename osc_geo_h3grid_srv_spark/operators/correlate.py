@@ -14,17 +14,25 @@ Semantics ported from the reference test suite (FIXTURES.md SS7):
 * output: all asset columns + all columns of every dataset
 
 Scale design (100 TB assets): cell assignment is one Arrow-batched pandas
-UDF; each dataset side is broadcast when small (the 24k-row flood sets
-auto-broadcast under the 10 MB threshold); for big-big joins AQE skew
-handling + optional parent-cell salting kicks in (plans/skew.py). The
+UDF (assets that arrive in a request body are already on the driver and
+get their cells there, with no Python stage); each dataset side is
+broadcast when small (the 24k-row flood sets auto-broadcast under the 10
+MB threshold); for big-big joins AQE skew handling + optional
+parent-cell salting kicks in (plans/skew.py). The
 reference's in-memory DuckDB + hash index (correlator.py:59-80)
 disappears into Catalyst's hash join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+import operator
+
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.catalog import quote_ident
 
 FILTER_OPS = {
     "greater_than": "__gt__",
@@ -35,22 +43,46 @@ FILTER_OPS = {
 }
 
 
-def add_cell_columns(assets: DataFrame, resolutions=range(16),
+# Spark types of the asset columns a pandas frame may carry, by dtype kind
+_PANDAS_DDL = {"f": "double", "i": "bigint", "u": "bigint", "b": "boolean",
+               "O": "string", "U": "string"}
+
+
+def add_cell_columns(assets: DataFrame | pd.DataFrame, resolutions=range(16),
                      lat_col="lat", lng_col="long") -> DataFrame:
     """cell_{r} hex columns for every resolution (correlator._add_cells,
-    minus the per-row loop). ONE mapInPandas pass computes every
-    resolution with the shared spherical projection
-    (h3core.latlng_to_cells_multi — round 1 ran 16 independent pandas
-    UDFs, redoing the face/azimuth trig 16x; VERDICT r01 what's-wrong
-    #3). The hex string rendering stays a JVM lower(hex(...)) projection
-    (bit-identical to h3core.cell_to_string — tested), so no Python
-    string objects cross Arrow."""
+    minus the per-row loop), computed with the shared spherical
+    projection (h3core.latlng_to_cells_multi — round 1 ran 16
+    independent pandas UDFs, redoing the face/azimuth trig 16x; VERDICT
+    r01 what's-wrong #3). The input's type picks where:
+
+    * a Spark DataFrame: ONE mapInPandas pass computes the cells, and
+      the hex string rendering stays a JVM lower(hex(...)) projection
+      (bit-identical to h3core.cell_to_string — tested), so no Python
+      string objects cross Arrow;
+    * a pandas frame (assets already on the driver, e.g. a request
+      body): the driver computes the cells and renders them with
+      h3core.cell_to_string, and one createDataFrame ships the result.
+      A Python stage would cost its job a fixed 0.3-0.4 s, which is
+      most of a request of a few assets."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from ..functions import h3core
     res_list = [int(r) for r in resolutions]
+    if isinstance(assets, pd.DataFrame):
+        cells = h3core.latlng_to_cells_multi(
+            assets[lat_col].to_numpy(dtype="float64"),
+            assets[lng_col].to_numpy(dtype="float64"), res_list)
+        out = assets.assign(**{f"cell_{r}": h3core.cell_to_string(cells[r])
+                               for r in res_list})
+        ddl = ", ".join(
+            [f"{quote_ident(c)} {_PANDAS_DDL[assets[c].dtype.kind]}"
+             for c in assets.columns]
+            + [f"cell_{r} string" for r in res_list])
+        return SparkSession.active().createDataFrame(out, ddl)
+    fields = assets.schema.fields
     out_schema = StructType(
-        list(assets.schema.fields)
+        list(fields)
         + [StructField(f"__icell_{r}", LongType()) for r in res_list])
 
     def gen(batches):
@@ -64,34 +96,38 @@ def add_cell_columns(assets: DataFrame, resolutions=range(16),
                 out[f"__icell_{r}"] = cells[r].view(np.int64)
             yield out
 
-    out = assets.mapInPandas(gen, schema=out_schema)
-    for r in res_list:
-        out = out.withColumn(
-            f"cell_{r}", F.lower(F.hex(F.col(f"__icell_{r}"))))
-    return out.drop(*[f"__icell_{r}" for r in res_list])
+    return assets.mapInPandas(gen, schema=out_schema).selectExpr(
+        *[quote_ident(f.name) for f in fields],
+        *[f"lower(hex(__icell_{r})) AS cell_{r}" for r in res_list])
 
 
 def compile_filters(df: DataFrame, filters) -> DataFrame:
     """P8: (col OP value OR col IS NULL) conjunction
-    (correlator.py:167-211). Unknown column -> error, like the reference's
-    column-exists check (correlator.py:186-190)."""
-    for f in filters or []:
+    (correlator.py:167-211), as one filter. Unknown column -> error, like
+    the reference's column-exists check (correlator.py:186-190)."""
+    if not filters:
+        return df
+    have = set(df.columns)
+    conds = []
+    for f in filters:
         colname = f["column"]
-        if colname not in df.columns:
+        if colname not in have:
             raise ValueError(f"filter column {colname!r} not in dataset")
         op = FILTER_OPS[f["filter_type"]]
         col = F.col(colname)
         cond = getattr(col, op)(F.lit(float(f["target_value"])))
-        df = df.filter(cond | col.isNull())
-    return df
+        conds.append(cond | col.isNull())
+    return df.filter(functools.reduce(operator.and_, conds))
 
 
-def correlate(catalog, assets: DataFrame, dataset_specs, resolution=7,
-              lat_col="lat", lng_col="long",
+def correlate(catalog, assets: DataFrame | pd.DataFrame, dataset_specs,
+              resolution=7, lat_col="lat", lng_col="long",
               broadcast_datasets=True, salt: int = 0,
               salt_src="id") -> DataFrame:
     """get_correlated_data (correlator.py:47-155).
 
+    assets: a Spark DataFrame, or a pandas frame of assets already on
+    the driver (see add_cell_columns).
     dataset_specs: [{"name": str, "filters": [...]}, ...]
 
     broadcast_datasets=True: each dataset hash-broadcast (the reference's
@@ -108,12 +144,10 @@ def correlate(catalog, assets: DataFrame, dataset_specs, resolution=7,
         ds = compile_filters(ds, spec.get("filters"))
         # disambiguate colliding column names like the SELECT * of an
         # attached-db join would surface them (suffix per dataset)
-        rename = {}
-        for c in ds.columns:
-            if c in out.columns:
-                rename[c] = f"{c}_{spec['name']}"
-        for old, new in rename.items():
-            ds = ds.withColumnRenamed(old, new)
+        have = set(out.columns)
+        rename = {c: f"{c}_{spec['name']}" for c in ds.columns if c in have}
+        if rename:
+            ds = ds.withColumnsRenamed(rename)
         cell_col = rename.get("h3_cell", "h3_cell")
         if broadcast_datasets:
             ds = F.broadcast(ds)

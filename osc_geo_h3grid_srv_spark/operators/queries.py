@@ -20,6 +20,8 @@ only pandas UDF on these paths is the point-dataset shapefile PIP test.
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 
 import numpy as np
@@ -27,14 +29,14 @@ from pyspark.sql import functions as F
 
 from ..functions import geo, h3core
 from ..functions.spark_udfs import reference_radius_expr
-from ..sources.catalog import interval_of
+from ..sources.catalog import interval_of, quote_ident
 
 CELL_COL = "h3_cell"  # reference const.py:11
 
 
-def _time_filter(df, interval, year=None, month=None, day=None):
-    """P2: equality filters on year/month/day key columns with the
-    reference's required-part errors (geomesh.py:1140-1186)."""
+def _time_filter(interval, year=None, month=None, day=None):
+    """P2: the equality predicates on year/month/day key columns, with
+    the reference's required-part errors (geomesh.py:1140-1186)."""
     conds = []
     if interval in ("yearly", "monthly", "daily"):
         if year is None:
@@ -48,9 +50,13 @@ def _time_filter(df, interval, year=None, month=None, day=None):
         if day is None:
             raise ValueError("daily dataset requires 'day'")
         conds.append(F.col("day") == F.lit(int(day)))
-    for c in conds:
-        df = df.filter(c)
-    return df
+    return conds
+
+
+def _in_bbox(la_min, la_max, lo_min, lo_max):
+    """latitude/longitude inside the bbox, bounds included."""
+    return (F.col("latitude").between(la_min, la_max)
+            & F.col("longitude").between(lo_min, lo_max))
 
 
 def _radius_guard(radius_km, res, is_point_dataset):
@@ -95,23 +101,30 @@ class DatasetQueries:
         self.value_columns = [c for c in self.meta["value_columns"]
                               if c not in (CELL_COL, "latitude", "longitude")]
         self.ds_type = self.meta["dataset_type"]
+        self.columns = [c["name"] for c in self.man["schema"]]
 
     def load(self):
         return self.catalog.frame(self.man)
 
-    def _timed(self, year, month, day, bbox=None):
-        """the time-filtered DataFrame. With a query bbox
+    def _timed(self, year, month, day, bbox=None, where=None):
+        """the dataset filtered by time and by the route's own predicate
+        `where` (a Column), all in one filter. With a query bbox
         (la_min, la_max, lo_min, lo_max) on a p{r}-partitioned dataset,
         the files are planned from the HEAD manifest first: only the
-        partitions _partition_prune keeps are read, and the same IN
-        filter stays on the pruned DataFrame."""
+        partitions _partition_prune keeps are read, and an IN predicate
+        on the same literals joins the filter (it reaches the scan as a
+        PartitionFilter). One filter, because every DataFrame step is
+        analysed eagerly in the JVM (about 9 ms each)."""
+        conds = _time_filter(self.interval, year, month, day)
         parts = None if bbox is None else self._partition_prune(self.man,
                                                                 *bbox)
-        df = _time_filter(self.catalog.frame(self.man, parts),
-                          self.interval, year, month, day)
-        for col, vals in (parts or {}).items():
-            df = df.filter(F.col(col).isin(sorted(vals)))
-        return df
+        conds += [F.col(col).isin(sorted(vals))
+                  for col, vals in (parts or {}).items()]
+        if where is not None:
+            conds.append(where)
+        df = self.catalog.frame(self.man, parts)
+        return df.filter(functools.reduce(operator.and_, conds)) \
+            if conds else df
 
     @staticmethod
     def _partition_prune(man, la_min, la_max, lo_min, lo_max):
@@ -156,14 +169,16 @@ class DatasetQueries:
     def _project(self, df):
         """P1 projection. h3 datasets: cell, centroid, values
         (geomesh.py:688-692). Point datasets: values, lat/lng and the
-        res{r} columns (geomesh.py:395-399, dataset_utilities.py:19-24)."""
+        res{r} columns (geomesh.py:395-399, dataset_utilities.py:19-24).
+        Column names as SQL strings: one py4j call per column, where a
+        select of names makes three."""
         if self.ds_type == "point":
-            res_cols = [c for c in df.columns
+            res_cols = [c for c in self.columns
                         if re.fullmatch(r"res[0-9]|res1[0-5]", c)]
-            return df.select(*self.value_columns, "latitude", "longitude",
-                             *res_cols)
-        return df.select(CELL_COL, "latitude", "longitude",
-                         *self.value_columns)
+            cols = [*self.value_columns, "latitude", "longitude", *res_cols]
+        else:
+            cols = [CELL_COL, "latitude", "longitude", *self.value_columns]
+        return df.selectExpr(*map(quote_ident, cols))
 
     # -- radius queries (geomesh.py:539-576 / 480-537 / 417-478) ------------
 
@@ -176,13 +191,12 @@ class DatasetQueries:
         datasets only reject a negative radius."""
         r = _radius_guard(radius_km, resolution,
                           is_point_dataset=self.ds_type == "point")
-        df = self._timed(year, month, day, None if r is None
-                         else self._radius_bbox(lat, lng, r))
-        if r is not None:
-            df = df.filter(
-                reference_radius_expr("latitude", "longitude", lat, lng)
-                <= F.lit(r))
-        return self._project(df)
+        if r is None:
+            return self._project(self._timed(year, month, day))
+        return self._project(self._timed(
+            year, month, day, self._radius_bbox(lat, lng, r),
+            reference_radius_expr("latitude", "longitude", lat, lng)
+            <= F.lit(r)))
 
     @staticmethod
     def _radius_bbox(lat, lng, r):
@@ -224,16 +238,16 @@ class DatasetQueries:
         (geomesh.py:836-855). Files are planned from the cell's boundary
         bbox."""
         cid = h3core.string_to_cell(np.array([cell_hex]))
-        bverts = h3core.cell_boundary(cid)[0]  # (6, 2) lat,lng
-        df = self._timed(year, month, day, (
-            float(bverts[:, 0].min()), float(bverts[:, 0].max()),
-            float(bverts[:, 1].min()), float(bverts[:, 1].max())))
         col = CELL_COL
         if self.ds_type == "point":
             col = f"res{int(h3core.get_resolution(cid)[0])}"
-            if col not in df.columns:
+            if col not in self.columns:
                 raise ValueError(f"dataset has no {col} column")
-        return self._project(df.filter(F.col(col) == F.lit(cell_hex)))
+        bverts = h3core.cell_boundary(cid)[0]  # (6, 2) lat,lng
+        return self._project(self._timed(year, month, day, (
+            float(bverts[:, 0].min()), float(bverts[:, 0].max()),
+            float(bverts[:, 1].min()), float(bverts[:, 1].max())),
+            F.col(col) == F.lit(cell_hex)))
 
     def latlong_point(self, lat, lng, resolution=7, year=None, month=None,
                       day=None):
@@ -253,11 +267,10 @@ class DatasetQueries:
         tests cell membership; polyfill keeps the cells whose centroid is
         inside, so a BETWEEN filter on the centroid columns is the same
         row set."""
-        df = self._timed(year, month, day, (
-            float(lat_min), float(lat_max), float(lng_min), float(lng_max)))
-        return self._project(df.filter(
-            F.col("latitude").between(float(lat_min), float(lat_max))
-            & F.col("longitude").between(float(lng_min), float(lng_max))))
+        bbox = (float(lat_min), float(lat_max), float(lng_min),
+                float(lng_max))
+        return self._project(self._timed(year, month, day, bbox,
+                                         _in_bbox(*bbox)))
 
     def shapefile(self, polygons: geo.PackedPolygons, region=None,
                   resolution=7, year=None, month=None, day=None):
@@ -283,14 +296,12 @@ class DatasetQueries:
             return self._project(df.join(F.broadcast(cells), on=CELL_COL,
                                          how="left_semi"))
         from ..functions.spark_udfs import pip_udf_for
-        la_min, la_max, lo_min, lo_max = (float(v) for v in polygons.bounds())
-        df = self._timed(year, month, day, (la_min, la_max, lo_min, lo_max))
+        bbox = tuple(float(v) for v in polygons.bounds())
         pip = pip_udf_for(self.catalog.spark.sparkContext.broadcast(
             polygons.to_arrays()))
-        df = df.filter(F.col("latitude").between(la_min, la_max)
-                       & F.col("longitude").between(lo_min, lo_max))
-        return self._project(df.filter(pip(F.col("latitude"),
-                                           F.col("longitude"))))
+        return self._project(self._timed(
+            year, month, day, bbox,
+            _in_bbox(*bbox) & pip(F.col("latitude"), F.col("longitude"))))
 
 
 def enumerate_region_cells(spark, polygons: geo.PackedPolygons, region=None,

@@ -107,7 +107,13 @@ def _partition_value(raw, spark_type):
 
 def _ddl(schema) -> str:
     """a manifest schema ([{name, type}]) as a Spark DDL string."""
-    return ", ".join(f"`{c['name']}` {c['type']}" for c in schema)
+    return ", ".join(f"{quote_ident(c['name'])} {c['type']}"
+                     for c in schema)
+
+
+def quote_ident(name) -> str:
+    """a column name as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def interval_of(key_columns) -> str:
@@ -324,8 +330,11 @@ class Catalog:
         NULL, no footer is inferred) and the result exposes exactly that
         column SET and ORDER — an old snapshot never shows a column added
         later. No planned file gives an empty DataFrame of that
-        schema."""
-        from pyspark.sql import functions as F
+        schema.
+
+        The projection is one selectExpr of SQL strings, one py4j call
+        per column: built from Columns it takes several per column, and
+        a serving request pays them on every call."""
         files = self.plan_files(man, partitions)
         schema = man["schema"]
         if not files:
@@ -337,13 +346,14 @@ class Catalog:
         # cast to the recorded type: hive partition-value inference may
         # narrow (e.g. a string partition column read back as int) and
         # the manifest is the source of truth
-        cols = [F.col(c["name"]).cast(c["type"]).alias(c["name"])
-                if c["name"] in have
-                else F.lit(None).cast(c["type"]).alias(c["name"])
-                for c in schema]
-        cols += [F.col(p) for p in man["partition_by"]
-                 if p not in {c["name"] for c in schema}]
-        return df.select(*cols)
+        exprs = []
+        for c in schema:
+            name = quote_ident(c["name"])
+            src = name if c["name"] in have else "NULL"
+            exprs.append(f"CAST({src} AS {c['type']}) AS {name}")
+        exprs += [quote_ident(p) for p in man["partition_by"]
+                  if p not in {c["name"] for c in schema}]
+        return df.selectExpr(*exprs)
 
     def added_since(self, man, snapshot):
         """frame() over the files of manifest `man` that snapshot

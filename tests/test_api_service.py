@@ -91,3 +91,30 @@ def test_filter_assets_and_showmeta(service):
     assert {"flood_0010y", "flood_1000y"} <= names
     with pytest.raises(KeyError):
         service.get("/api/geomesh/nope")
+
+
+def _filter_plan(service, monkeypatch, assets):
+    """the executed plan of one POST /api/geomesh/filter request."""
+    from osc_geo_h3grid_srv_spark import api
+    frames = []
+    real = api.df_payload
+    monkeypatch.setattr(api, "df_payload",
+                        lambda df: frames.append(df) or real(df))
+    service.post("/api/geomesh/filter", body={
+        "assets": assets,
+        "datasets": [{"name": "flood_0010y", "filters": []}]})
+    return frames[0]._jdf.queryExecution().executedPlan().toString()
+
+
+def test_filter_plan_has_a_python_stage_only_for_parquet_assets(
+        service, monkeypatch, tmp_path, spark):
+    listed = [{"id": "Bremen", "lat": 53.08, "long": 8.803}]
+    plan = _filter_plan(service, monkeypatch, listed)
+    for python_stage in ("MapInPandas", "ArrowEvalPython",
+                         "BatchEvalPython"):
+        assert python_stage not in plan
+    path = str(tmp_path / "assets.parquet")
+    spark.createDataFrame([("Bremen", 53.08, 8.803)],
+                          "id string, lat double, long double") \
+        .write.parquet(path)
+    assert "MapInPandas" in _filter_plan(service, monkeypatch, path)

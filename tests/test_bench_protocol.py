@@ -63,6 +63,17 @@ def test_bench_and_ladder_share_one_session_shape(shapes, monkeypatch):
         f"{bench.HOST.driver_memory_mb}m"
 
 
+def test_session_puts_the_repo_first_on_pythonpath(shapes, monkeypatch):
+    """Spark's Python workers and the N level's child import the package
+    from PYTHONPATH, whatever directory bench.py was started from."""
+    monkeypatch.setenv("PYTHONPATH", "/elsewhere")
+    with pytest.raises(Built):
+        bench.session(4)
+    root = os.path.dirname(os.path.abspath(bench.__file__))
+    assert os.environ["PYTHONPATH"].split(os.pathsep) == [root,
+                                                          "/elsewhere"]
+
+
 def test_subset_run_launches_no_child(shapes, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_ONLY", "h3_cell_counts")
     monkeypatch.setattr(bench, "CPUS", 4)

@@ -101,3 +101,35 @@ def test_unknown_filter_column_raises(engine, assets_df):
             {"name": "flood_0010y",
              "filters": [{"column": "nope", "filter_type": "equal_to",
                           "target_value": 1}]}]).count()
+
+
+def test_pandas_and_spark_assets_give_identical_rows(engine, spark):
+    """assets already on the driver (a pandas frame) get their cells
+    there; a Spark DataFrame gets them in a mapInPandas pass. Same rows
+    either way, across the antimeridian and above 85 degrees too."""
+    import numpy as np
+    import pandas as pd
+
+    from osc_geo_h3grid_srv_spark.functions import h3core
+    assets = pd.DataFrame({
+        "id": ["Berlin", "Bremen", "Cologne", "Fiji", "Arctic"],
+        "lat": [52.52, 53.08, 50.95, -16.8, 86.3],
+        "long": [13.400, 8.803, 6.950, 179.9999, -40.0]})
+    # a dataset holding every asset's res-7 cell, so no asset drops out
+    cells = h3core.cell_to_string(h3core.latlng_to_cell(
+        assets["lat"].to_numpy(), assets["long"].to_numpy(), 7))
+    engine.load_dataset_from_df(
+        "asset_cells", spark.createDataFrame(pd.DataFrame({
+            "h3_cell": cells, "latitude": assets["lat"],
+            "longitude": assets["long"], "v": np.arange(5.0)})),
+        dataset_type="h3", key_columns={"h3_cell": "VARCHAR"},
+        value_columns={"v": "DOUBLE"})
+    sdf = spark.createDataFrame(assets, "id string, lat double, long double")
+    for specs, n in (([{"name": "asset_cells", "filters": []}], 5),
+                     ([{"name": "flood_0010y", "filters": []}], 2)):
+        local = engine.correlate(assets, specs)
+        dist = engine.correlate(sdf, specs)
+        assert local.schema == dist.schema
+        assert sorted(local.collect()) == sorted(dist.collect())
+        assert local.count() == n
+    assert all(f"cell_{r}" in local.columns for r in range(16))

@@ -84,3 +84,20 @@ def test_partitioned_evolution(spark, tmp_path):
     got = {(r["id"], r["p"], r["w"]) for r in head.collect()}
     assert got == {(0, "0", None), (1, "1", None), (2, "0", None),
                    (3, "1", None), (4, "0", 40), (5, "1", 50)}
+
+
+def test_keyword_column_names_survive_the_projection(spark, tmp_path):
+    """Catalog.frame projects with SQL strings, so a column named like a
+    SQL keyword must stay a quoted identifier there."""
+    cat = Catalog(str(tmp_path / "wh"), spark)
+    cat.write("t", spark.range(2).select(
+        F.col("id"), F.col("id").cast("int").alias("order"),
+        F.lit("x").alias("from")))
+    cat.write("t", spark.range(2, 4).select(
+        F.col("id"), F.col("id").cast("int").alias("order")),
+        mode="append")
+    head = cat.load("t")
+    assert head.dtypes == [("id", "bigint"), ("order", "int"),
+                           ("from", "string")]
+    assert _rows(head) == [(0, 0, "x"), (1, 1, "x"), (2, 2, None),
+                           (3, 3, None)]
